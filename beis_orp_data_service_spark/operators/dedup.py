@@ -67,40 +67,14 @@ PERMS: list[tuple[int, int]] = generate_perms(8)
 PERMS_FULL: list[tuple[int, int]] = generate_perms(256)  # reference width
 
 
-def char_shingles_expr(text_col: str, k: int = SHINGLE_K) -> str:
-    """Distinct k-char shingles as a Spark SQL expression (array<string>).
-
-    Used by the MLlib path; the arithmetic-signature path below hashes
-    shingles without materializing the strings."""
-    return (
-        f"array_distinct(transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-        f" i -> substr({text_col}, i, {k})))"
-    )
-
-
-def char_codes_expr(text_col: str) -> str:
-    """ASCII code per character, one array<bigint> per row — materialized
-    once so every shingle hash is pure integer arithmetic over it."""
-    return (
-        f"transform(sequence(1, length({text_col})),"
-        f" i -> CAST(ascii(substr({text_col}, i, 1)) AS BIGINT))"
-    )
-
-
-def rolled_shingle_hashes_expr(codes_col: str, k: int = SHINGLE_K) -> str:
-    """Distinct polynomial k-shingle hashes from the codes array:
-    h = fold(acc*31 + code) mod P over each length-k window, with the
-    fold unrolled into nested arithmetic (no inner lambda → ~5× faster
-    than an aggregate() per shingle at equal semantics).
-    Positions beyond end (len < k only) contribute 0."""
-    h = f"coalesce(element_at({codes_col}, i), CAST(0 AS BIGINT))"
-    for j in range(1, k):
-        nxt = f"coalesce(element_at({codes_col}, i+{j}), CAST(0 AS BIGINT))"
-        h = f"(({h})*31 + {nxt}) % {MERSENNE_P}"
-    return (
-        f"array_distinct(transform(sequence(1, greatest(size({codes_col}) - {k - 1}, 1)),"
-        f" i -> {h}))"
-    )
+def prefix_length(n_col: str, threshold_milli: int) -> Column:
+    """Prefix-filter length ``n - ceil(t·n) + 1`` of a set of ``n``
+    tokens at threshold ``t = threshold_milli / 1000`` (integer ceil:
+    ``(t_milli·n + 999) DIV 1000``). ``n`` is cast to bigint first: on
+    the int32 ``size()`` of a set, ``t_milli·n`` wraps past 2^31
+    (2.1–4.3M distinct tokens, depending on the threshold)."""
+    n = f"CAST({n_col} AS BIGINT)"
+    return F.expr(f"{n} - ({threshold_milli} * {n} + 999) DIV 1000 + 1")
 
 
 def rolled_hash_at(text_col: str, pos_col: str, k: int = SHINGLE_K) -> str:
@@ -1259,15 +1233,9 @@ def jaccard_prefix_join(
         .select("_id", "tok", "_df", F.row_number().over(w).alias("_pos"))
     )
     sizes = sets.select("_id", "_n")
-    # prefix length = n - ceil(t*n) + 1 (integer ceil: (t_milli*n + 999) DIV 1000)
     prefix = (
         ranked.join(sizes, "_id")
-        .where(
-            F.col("_pos")
-            <= F.col("_n")
-            - F.expr(f"({threshold_milli} * _n + 999) DIV 1000")
-            + F.lit(1)
-        )
+        .where(F.col("_pos") <= prefix_length("_n", threshold_milli))
         .select("_id", "tok")
     )
     cand = (
@@ -1452,12 +1420,7 @@ def containment_prefix_join(
     sizes = sets.select("_id", "_n")
     prefix = (
         ranked.join(sizes, "_id")
-        .where(
-            F.col("_pos")
-            <= F.col("_n")
-            - F.expr(f"({threshold_milli} * _n + 999) DIV 1000")
-            + F.lit(1)
-        )
+        .where(F.col("_pos") <= prefix_length("_n", threshold_milli))
         .select(F.col("_id").alias("a_id"), "tok")
     )
     cand = (

@@ -53,11 +53,6 @@ TOKEN_SPLIT = LC_TOKEN_SPLIT  # oracle twins interpolate this
 _tokens = lc_tokens
 
 
-def doc_lengths(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, dl): whitespace-token count per document. No shuffle."""
-    return df.select(F.col(id_col), F.size(_tokens(text_col)).alias("dl"))
-
-
 def bm25_topk(
     df: DataFrame,
     id_col: str,

@@ -18,9 +18,9 @@ Operator map (SURVEY.md §2.5):
   Q5 date range          search_functions.py:50-57   → >= / <=
   Q6 substring           search_functions.py:59-61   → lower(col).contains
   Q7 not-archive         search_functions.py:16,26,64→ col != 'archive'
-  Q8 limit guard         search_functions.py:64      → limit
+  Q8 limit guard         search_functions.py:64      → page window clipped at the cap
   Q9 sort                search_functions.py:98,121  → orderBy
-  Q10 pagination         search_functions.py:122     → row_number window
+  Q10 pagination         search_functions.py:122     → limit + offset (top-K)
   Q11 two-phase fetch    search_functions.py:90-125  → single plan (pruning)
   Q15 left-join merge    search_functions.py:128-131 → left join + coalesce
   Q18 projection         search_functions.py:4-6     → select
@@ -96,34 +96,53 @@ def sort_page(
     page: int,
     page_size: int,
     tiebreak: str,
+    cap: int | None = None,
 ) -> DataFrame:
     """Q9 + Q10 — deterministic sort + offset pagination.
 
     ``page`` is 0-based with offset = page·page_size — the reference
     API contract (handler.py:20: page defaults 0). A unique tiebreak
     column makes pagination stable — the reference relies on pandas'
-    stable sort (search_functions.py:121-122).
+    stable sort (search_functions.py:121-122). ``cap`` clips the page
+    window so no row past the cap-th in sort order is returned (a page
+    starting at or past it is empty).
 
-    Scale shape: ``orderBy(...).limit(offset+size)`` compiles to
-    TakeOrderedAndProject — a distributed per-partition top-K followed by
-    a driver-side merge of K rows per partition — so no global sort and
-    no single-partition shuffle ever happens. The row_number window that
-    drops the offset then runs over at most offset+size rows.
+    Scale shape: ``orderBy(...).limit(offset+size).offset(offset)``
+    compiles to one TakeOrderedAndProject(limit, offset) — a per-
+    partition top-K merged on the driver, which drops the offset rows —
+    so there is no global sort, no Exchange and no Window. At the root of
+    ``collect()`` over a scan, the whole page is one Spark job of one
+    stage.
     """
     cols = (
         [F.col(order_col).asc(), F.col(tiebreak).asc()]
         if ascending
         else [F.col(order_col).desc(), F.col(tiebreak).desc()]
     )
-    lo = page * page_size
-    top = df.orderBy(*cols).limit(lo + page_size)
-    # Window scale: window runs on the orderBy().limit(offset+page)
-    # result, ≤ offset+page rows.
-    w = Window.orderBy(*cols)
-    return (
-        top.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > lo)
-        .drop("_rn")
+    lo, hi = page * page_size, (page + 1) * page_size
+    if cap is not None:
+        lo, hi = min(lo, cap), min(hi, cap)
+    return df.orderBy(*cols).limit(hi).offset(lo)
+
+
+def page_args(params: SearchParams) -> dict:
+    """:func:`sort_page` arguments for a search request's page: newest
+    (or oldest) ``date_published`` first, ``document_uid`` tiebreak, and
+    the Q8 match cap (search_functions.py:64) as a clip on the page
+    window rather than a ``limit`` on the matches.
+
+    Below the cap this is the reference's page exactly. Above it, the
+    reference's TQL ``limit 10000`` keeps an arbitrary 10,000 matches and
+    pages through those; here the page is the deterministic top of ALL
+    matches in sort order, clipped at the 10,000th — one of the outcomes
+    the reference already allows."""
+    return dict(
+        order_col="date_published",
+        ascending=(params.order == "asc"),
+        page=params.page,
+        page_size=params.page_size,
+        tiebreak="document_uid",
+        cap=SEARCH_MATCH_LIMIT,
     )
 
 
@@ -137,19 +156,12 @@ def search(
     reference's three sequential TypeDB round-trips (search_functions.py:88-144).
 
     Phase structure of the reference (ids+dates → page → full attrs →
-    legislative origins) collapses into filter → limit-guard → sort+page →
+    legislative origins) collapses into filter → capped top-K page →
     left join → project; Catalyst prunes the unused columns from phase 1
     automatically.
     """
-    filtered = documents.filter(build_predicate(params)).limit(SEARCH_MATCH_LIMIT)
-    paged = sort_page(
-        filtered,
-        order_col="date_published",
-        ascending=(params.order == "asc"),
-        page=params.page,
-        page_size=params.page_size,
-        tiebreak="document_uid",
-    )
+    filtered = documents.filter(build_predicate(params))
+    paged = sort_page(filtered, **page_args(params))
     if legislation_edges is not None:  # Q15 — docs ⟕ legislative origins
         paged = paged.join(F.broadcast(legislation_edges), "document_uid", "left")
     if return_cols:

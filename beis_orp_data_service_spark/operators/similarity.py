@@ -209,6 +209,11 @@ def ivf_topk(
     (same ``bits``) — pass when several probe configurations share one
     corpus (e.g. single-probe and multiprobe arms of a recall report)
     so the corpus signing scan runs once, not per configuration."""
+    if bits == "auto" and corpus_buckets is not None:
+        raise ValueError(
+            "corpus_buckets requires the explicit int bits the table was "
+            "signed with, not 'auto'"
+        )
     if bits == "auto":
         bits = auto_bits(n_rows if n_rows is not None else embeddings.count())
     probe = sign_bucket(vec_col, bits)
@@ -342,6 +347,8 @@ def ivf_kmeans_topk(
     when known to skip the sizing scan."""
     import math
 
+    if assigned is not None and centroids is None:
+        raise ValueError("assigned requires centroids (same quantizer)")
     if centroids is not None:
         cents = np.asarray(centroids, dtype=np.float64)
     else:
@@ -351,8 +358,6 @@ def ivf_kmeans_topk(
         cents = kmeans_centroids(
             embeddings, vec_col, n_centroids, seed=seed, n_rows=n
         )
-    if assigned is not None and centroids is None:
-        raise ValueError("assigned requires centroids (same quantizer)")
     probe_n = _nearest_centroids_udf(cents, nprobe)
     t = (
         assigned

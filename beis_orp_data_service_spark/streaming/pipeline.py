@@ -826,8 +826,6 @@ def ingest_batch(
     re-reads the whole store or index."""
     from beis_orp_data_service_spark.pipelines import ingestion as ing
 
-    if not batch.take(1):
-        return
     msgs = batch.select(
         F.col("event_id").alias("media_id"),
         F.col("user_id").alias("doc_key"),
@@ -836,6 +834,11 @@ def ingest_batch(
         F.encode(F.col("props"), "utf-8").alias("content"),
         F.col("props").alias("raw_text"),
     ).persist()
+    # probe the persisted frame, not ``batch``: a second read of the
+    # source would count its rows twice in the query's numInputRows
+    if not msgs.take(1):
+        msgs.unpersist()
+        return
     converted = ing.convert_stage(
         msgs.select("media_id", "document_format", "content")
     )

@@ -191,12 +191,9 @@ ALLOW_BNLJ = {
 # which inspects package SOURCE) and the plan gate: a plan-level global
 # window reaching a declared query is now caught mechanically.
 ALLOW_GLOBAL_WINDOW: dict[str, str] = {
-    # pagination spelling: row_number over an orderBy().limit(offset+
-    # page) result — ≤ offset+page rows reach the window (search.py
-    # paged_sort, 'Window scale' marker there)
-    "q_search_flagship": "row_number over limit(offset+page) rows",
-    "q_sort_page": "row_number over limit(offset+page) rows",
-    "search_rerank": "row_number over limit(offset+page) candidate page",
+    # rank window over the reranked orderBy().limit(k) page, ≤ k rows
+    # (ranking.py rerank_topk 'Window scale' marker)
+    "search_rerank": "row_number over a limit(k) reranked page",
     # planted-violation fixture: window over an orderBy().limit(3)
     # result (declared.py dq_report_q inline marker)
     "dq_report": "row_number over a 3-row limit() fixture",

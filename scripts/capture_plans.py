@@ -4,9 +4,9 @@ Usage:
     python scripts/capture_plans.py <suffix> <query> [<query> ...]
     python scripts/capture_plans.py before decontaminate_fuzzy minhash_lsh_pairs
 
-Writes ``plans/r14/<query>_<suffix>.txt`` for each query — the judge
-reads these to check plan claims (Exchange counts, join strategies,
-PushedFilters, Python-eval nodes) against the code, so they are captured
+Writes ``plans/r16/<query>_<suffix>.txt`` for each query, so plan claims
+(Exchange counts, join strategies, PushedFilters, Python-eval nodes) can
+be checked against the code; they are captured
 from the exact registry entry the bench times, at the bench's sf_dir.
 
 Queries built around non-plan work (streaming fixtures, multi-action
@@ -25,7 +25,7 @@ from beis_orp_data_service_spark import declared  # noqa: E402
 from beis_orp_data_service_spark.session import get_spark  # noqa: E402
 
 ROUND_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15"
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"
 )
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from beis_orp_data_service_spark import declared  # noqa: E402
 from beis_orp_data_service_spark.catalog import load_table  # noqa: E402
 from beis_orp_data_service_spark.functions.text import lc_tokens  # noqa: E402
+from beis_orp_data_service_spark.operators.dedup import prefix_length  # noqa: E402
 from beis_orp_data_service_spark.session import get_spark  # noqa: E402
 from scaling_probe import inflate  # noqa: E402
 
@@ -86,10 +87,7 @@ def _prefix_stats(spark, sf_dir: str, kind: str) -> dict:
     sizes = toks.select("_id", F.size("_set").alias("_n"))
     prefix = (
         ranked.join(sizes, "_id")
-        .where(
-            F.col("_pos")
-            <= F.col("_n") - F.expr(f"({t_milli} * _n + 999) DIV 1000") + 1
-        )
+        .where(F.col("_pos") <= prefix_length("_n", t_milli))
         .select("_id", "tok")
         .localCheckpoint()
     )

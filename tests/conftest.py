@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import uuid
 
 import pytest
 
@@ -16,3 +17,17 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("engine-tests", shuffle_partitions=8)
     yield s
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), n)`` where ``n`` is the number of Spark jobs ``fn``
+    launched on this thread, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -27,6 +27,14 @@ def corpus(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
+def test_prefix_length_no_int32_wrap(spark):
+    # 500 * 5M = 2.5e9 > 2^31: the int32 product of size() would wrap
+    df = spark.range(1).select(F.lit(5_000_000).alias("_n"))
+    assert df.schema["_n"].dataType.simpleString() == "int"
+    got = df.select(dd.prefix_length("_n", 500).alias("p")).first().p
+    assert got == 5_000_000 - 2_500_000 + 1
+
+
 def test_minhash_identical_docs_identical_sigs(spark, corpus):
     sigs = {r.doc_id: r.sig_text for r in dd.minhash_signature(corpus, "doc_id", "text").collect()}
     assert sigs[1] == sigs[2]  # same text → same signature

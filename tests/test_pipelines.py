@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from beis_orp_data_service_spark.pipelines import ingestion, legislation_refresh, search_api
+from tests.conftest import spark_jobs
 
 CSV = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -126,6 +127,71 @@ def test_search_api_empty_and_400(spark, searchable):
     assert empty["status_code"] == 404 and empty["documents"] == []
     bad = search_api.handle_search(searchable, {"frobnicate": 1})
     assert bad["status_code"] == 400 and "frobnicate" in bad["error"]
+
+
+N_LIVE = 10_050  # matches past the 10,000 cap
+
+
+@pytest.fixture(scope="module")
+def crowded(spark):
+    """N_LIVE live documents plus 50 archived ones, 500 distinct dates:
+    every date is shared, so the document_uid tiebreak decides order."""
+    return spark.range(N_LIVE + 50, numPartitions=4).select(
+        F.format_string("d%05d", "id").alias("document_uid"),
+        F.lit("ea").alias("regulator_id"),
+        F.when(F.col("id") < N_LIVE, "published").otherwise("archive").alias("status"),
+        F.timestamp_seconds(F.lit(1_600_000_000) + F.col("id") % 500 * 86_400)
+        .alias("date_published"),
+    )
+
+
+def _desc_order(n):
+    return [f"d{i:05d}" for i in sorted(range(n), key=lambda i: (i % 500, i), reverse=True)]
+
+
+def test_search_api_total_capped_and_page_clipped_at_cap(spark, crowded):
+    want = _desc_order(N_LIVE)
+    first = search_api.handle_search(crowded, {})
+    assert first["total_search_results"] == 10_000
+    assert [d["document_uid"] for d in first["documents"]] == want[:10]
+    # offset 9,995 (page 5 of 1,999): the window is clipped at the cap,
+    # so only the 9,996th..10,000th matches come back
+    last = search_api.handle_search(crowded, {"page": 5, "page_size": 1999})
+    assert last["status_code"] == 200 and last["total_search_results"] == 10_000
+    assert [d["document_uid"] for d in last["documents"]] == want[9_995:10_000]
+    for page, size in [(1000, 10), (2, 5000), (5000, 10)]:  # offset >= cap
+        past = search_api.handle_search(crowded, {"page": page, "page_size": size})
+        assert past == {"status_code": 404, "total_search_results": 10_000, "documents": []}
+
+
+def test_search_api_below_cap_page_past_cap_keeps_total(spark, searchable):
+    res = search_api.handle_search(searchable, {"page": 1000, "page_size": 10})
+    assert res == {"status_code": 404, "total_search_results": 2, "documents": []}
+
+
+def test_search_api_folded_predicate_is_total_zero(spark, searchable):
+    # Catalyst folds this plan to an empty relation and drops the
+    # observed-metrics node with it
+    res = search_api.handle_search(searchable.where(F.lit(False)), {})
+    assert res == {"status_code": 404, "total_search_results": 0, "documents": []}
+
+
+def test_search_api_request_is_one_spark_job(spark, crowded):
+    res, jobs = spark_jobs(
+        spark, lambda: search_api.handle_search(crowded, {"page": 3, "order": "asc"})
+    )
+    assert res["status_code"] == 200 and len(res["documents"]) == 10
+    assert res["total_search_results"] == 10_000
+    assert jobs == 1
+
+
+def test_search_api_page_matches_search(spark, crowded):
+    from beis_orp_data_service_spark.operators.search import search
+
+    for body in [{}, {"page": 7, "order": "asc"}, {"page": 5, "page_size": 1999}]:
+        got = [d["document_uid"] for d in search_api.handle_search(crowded, body)["documents"]]
+        want = [r.document_uid for r in search(crowded, search_api.parse_request(body)).collect()]
+        assert got == want and got
 
 
 def test_legislation_refresh_idempotent_overlap(spark):

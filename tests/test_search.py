@@ -95,6 +95,12 @@ def test_sort_page_stable_and_disjoint(docs):
     assert ids1 == ["d2", "d5"]  # 2021-03-05, then 2021-02-01 tie → uid desc
     assert ids2 == ["d4", "d1"]
     assert not set(ids1) & set(ids2)
+    # the cap clips the page window: nothing past the cap-th row
+    capped = [
+        [r.document_uid for r in sort_page(base, "date_published", False, 1, 2, "document_uid", cap=c).collect()]
+        for c in (3, 2)
+    ]
+    assert capped == [["d4"], []]
 
 
 def test_search_end_to_end_with_left_join(spark, docs):

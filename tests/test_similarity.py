@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from beis_orp_data_service_spark.catalog import load_table
 from beis_orp_data_service_spark.operators import similarity as sim
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_jobs
 
 
 @pytest.fixture(scope="module")
@@ -96,8 +96,19 @@ def test_ivf_topk_prebuilt_corpus_buckets_identical(spark, emb):
     pre = sim.ivf_topk(
         emb, queries, k=5, bits=4, multiprobe=True, corpus_buckets=signed
     )
-    key = lambda r: (r.query_id, r.rank)  # noqa: E731
     assert sorted(map(tuple, base.collect())) == sorted(map(tuple, pre.collect()))
+
+
+def test_ivf_topk_auto_bits_with_prebuilt_buckets_raises_before_any_job(spark, emb):
+    # the auto width need not match the width the table was signed with
+    signed = sim.ivf_sign_table(emb, "vec_id", "embedding", bits=4)
+    queries = emb.filter(F.col("vec_id") < 5)
+
+    def call():
+        with pytest.raises(ValueError, match="corpus_buckets"):
+            sim.ivf_topk(emb, queries, bits="auto", corpus_buckets=signed)
+
+    assert spark_jobs(spark, call)[1] == 0
 
 
 def test_ivf_kmeans_topk_prebuilt_assignment_identical(spark, emb):
@@ -117,6 +128,19 @@ def test_ivf_kmeans_topk_prebuilt_assignment_identical(spark, emb):
         assigned=sim.ivf_assign_table(emb, "vec_id", "embedding", cents),
     )
     assert sorted(map(tuple, base.collect())) == sorted(map(tuple, pre.collect()))
+
+
+def test_ivf_kmeans_topk_assigned_without_centroids_raises_before_any_job(spark, emb):
+    # the guard must fire before the sizing count and the k-means fit
+    queries = emb.filter(F.col("vec_id") < 5)
+    # any (neighbor_id, tvec, bucket) table serves as the prebuilt one
+    assigned = sim.ivf_sign_table(emb, "vec_id", "embedding", bits=4)
+
+    def call():
+        with pytest.raises(ValueError, match="assigned requires centroids"):
+            sim.ivf_kmeans_topk(emb, queries, assigned=assigned)
+
+    assert spark_jobs(spark, call)[1] == 0
 
 
 def test_embedding_dup_pairs_symmetric_threshold(spark, emb):

@@ -623,6 +623,10 @@ def test_ingest_stream_e2e_restart_no_dup_no_loss(spark, tmp_path):
     q = st.run_ingest_stream(spark, str(d), chk, idx, store, flags)
     try:
         q.processAllAvailable()
+        # Spark counts numInputRows once per source scan: a batch body
+        # that read its batch twice would double it (and every
+        # throughput computed from it)
+        assert [p["numInputRows"] for p in q.recentProgress] == [2, 2]
     finally:
         q.stop()
 
@@ -645,6 +649,7 @@ def test_ingest_stream_e2e_restart_no_dup_no_loss(spark, tmp_path):
     q = st.run_ingest_stream(spark, str(d), chk, idx, store, flags)
     try:
         q.processAllAvailable()
+        assert [p["numInputRows"] for p in q.recentProgress] == [2]
     finally:
         q.stop()
 
