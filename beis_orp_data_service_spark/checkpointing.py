@@ -23,8 +23,8 @@ blocks on executors, UNREPLICATED, and discards the lineage needed to
 recompute them — on a 1000-executor cluster a single executor loss
 mid-iteration kills the whole job (Spark cannot rebuild the lost
 blocks). Locally it is the right default (no distributed FS round
-trip). The ``strategy`` parameter exposes the cluster-safe options
-without rewriting any operator:
+trip). Which boundary runs is a deployment decision, so it is made
+once, here, for every stage boundary: ``SPARK_GRAFT_CHECKPOINT`` picks
 
 - ``"local"`` (default): ``localCheckpoint`` — fastest, lineage
   truncated, blocks on executors; a lost executor is fatal to the job.
@@ -34,17 +34,14 @@ without rewriting any operator:
   ``$SPARK_GRAFT_CKPT_DIR`` or a local tmp dir so tests run without
   ceremony). Survives executor loss: blocks are re-read from the
   distributed FS, lineage is not needed.
-- ``"persist"``: ``persist(StorageLevel.DISK_ONLY_2)`` — 2×-replicated
-  executor-disk blocks, lineage KEPT (recompute remains possible and
-  the plan keeps growing). Right for loops whose round references the
-  previous round ONCE (linear plan growth, e.g. PageRank); wrong for
-  k-core-shaped loops (3 refs/round → 3^rounds plan blow-up) — those
-  need a truncating strategy.
 
-The per-operator ``checkpoint="local"|"reliable"|"persist"`` kwarg
-(kcore, reachability, shortest paths, BPE learn, connected components,
-containment join, ...) wins over the ``SPARK_GRAFT_CHECKPOINT`` env
-default, which wins over ``"local"``.
+Both truncate lineage, and the iterative operators depend on it: each
+round of reachability, shortest paths, k-core and dup_clusters refers
+to its predecessor two or more times, so a boundary that kept lineage
+would grow the plan geometrically with the round count, and
+``operators.ranks`` needs a lost block to fail loudly or re-read, never
+to recompute through a fresh range-partitioner sample. Any other
+value raises before the boundary plans or runs anything.
 """
 
 from __future__ import annotations
@@ -54,7 +51,7 @@ import tempfile
 
 from pyspark.sql import DataFrame
 
-STRATEGIES = ("local", "reliable", "persist")
+STRATEGIES = ("local", "reliable")
 
 # (label, physical-plan string) per stage boundary, in execution order;
 # populated only under SPARK_GRAFT_AUDIT=1 and drained per query by
@@ -105,11 +102,15 @@ def stage_checkpoint(
     df: DataFrame,
     eager: bool = True,
     label: str = "",
-    strategy: str | None = None,
 ) -> DataFrame:
     """Materialize a stage boundary (see module docstring). ``label``
     names the boundary in audit fragments (falls back to the calling
     operator being obvious from the fragment's own plan text)."""
+    strategy = os.environ.get("SPARK_GRAFT_CHECKPOINT", "local")
+    if strategy not in STRATEGIES:
+        raise ValueError(
+            f"unknown SPARK_GRAFT_CHECKPOINT {strategy!r}; use {STRATEGIES}"
+        )
     if audit_enabled():
         try:
             _AUDIT_FRAGMENTS.append(
@@ -117,17 +118,7 @@ def stage_checkpoint(
             )
         except Exception:  # noqa: BLE001 - audit must never break the job
             _AUDIT_FRAGMENTS.append((label, "<plan unavailable>"))
-    strategy = strategy or os.environ.get("SPARK_GRAFT_CHECKPOINT", "local")
-    if strategy not in STRATEGIES:
-        raise ValueError(f"unknown checkpoint strategy {strategy!r}; use {STRATEGIES}")
-    if strategy == "local":
-        return df.localCheckpoint(eager=eager)
     if strategy == "reliable":
         _ensure_checkpoint_dir(df)
         return df.checkpoint(eager=eager)
-    from pyspark import StorageLevel
-
-    out = df.persist(StorageLevel.DISK_ONLY_2)
-    if eager:
-        out.count()
-    return out
+    return df.localCheckpoint(eager=eager)

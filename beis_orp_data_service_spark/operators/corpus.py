@@ -111,7 +111,6 @@ def dup_clusters(
     nodes: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 15,
-    checkpoint: str = "local",
     driver_closure_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Transitive closure of duplicate pairs → (doc_id, cluster_id).
@@ -145,10 +144,7 @@ def dup_clusters(
     the same convergence class as large-star/small-star (Kiveris et
     al., "Connected Components in MapReduce") with simpler primitives.
     The per-round boundary truncates lineage so the plan stays flat
-    however many rounds run. ``checkpoint``: "local" (default) is
-    unreplicated executor state — a lost executor mid-closure kills
-    the job at cluster scale; "reliable" recovers from the
-    distributed checkpoint dir (see ``checkpointing``).
+    however many rounds run.
     """
     if driver_closure_threshold:
         # Materialize the (possibly expensive) pair pipeline ONCE at
@@ -161,9 +157,7 @@ def dup_clusters(
         # list from it), so nothing executes twice.
         pairs = pairs.select(
             F.col("a_id").cast("bigint"), F.col("b_id").cast("bigint")
-        ).transform(
-            stage_checkpoint, label="dup_clusters:pairs", strategy=checkpoint
-        )
+        ).transform(stage_checkpoint, label="dup_clusters:pairs")
         probe = pairs.limit(driver_closure_threshold + 1).collect()
         if len(probe) <= driver_closure_threshold:
             return _driver_closure(probe, nodes, id_col)
@@ -182,11 +176,11 @@ def dup_clusters(
             )
         )
         .distinct()
-        .transform(stage_checkpoint, label="dup_clusters:edges", strategy=checkpoint)
+        .transform(stage_checkpoint, label="dup_clusters:edges")
     )
     labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    ).transform(stage_checkpoint, label="dup_clusters:labels", strategy=checkpoint)
+    ).transform(stage_checkpoint, label="dup_clusters:labels")
 
     # Convergence detection (r14, guide §1.2): labels are pointwise
     # non-increasing round over round (each round takes a min over a
@@ -216,9 +210,7 @@ def dup_clusters(
         new_labels = (
             l1.join(lb, l1.label == lb.node2)
             .select(F.col("node"), F.col("label2").alias("label"))
-            .transform(
-                stage_checkpoint, label="dup_clusters:round", strategy=checkpoint
-            )
+            .transform(stage_checkpoint, label="dup_clusters:round")
         )
         new_sum = _label_sum(new_labels)
         labels = new_labels
@@ -1471,7 +1463,6 @@ def bpe_learn_merges(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_merges: int = 8,
-    checkpoint: str = "local",
     word_freq: DataFrame | None = None,
     driver_train_threshold: int = 100_000,
 ) -> DataFrame:
@@ -1489,9 +1480,7 @@ def bpe_learn_merges(
     work too. Per merge: one map-side-combined pair aggregation, a
     1-row argmax collect (the standard driver scalar for iterative
     algorithms), and one Arrow map pass applying the merge; the
-    per-iteration stage boundary keeps the plan flat. ``checkpoint``:
-    "local" is unreplicated — an executor loss mid-training kills the
-    job at cluster scale; "reliable" survives it (``checkpointing``).
+    per-iteration stage boundary keeps the plan flat.
     ``word_freq``: a precomputed :func:`word_freq_table` ``(w, freq)``
     — pass it when several trainers share one corpus so the base scan
     runs once.
@@ -1510,9 +1499,7 @@ def bpe_learn_merges(
     vocab = wf.select(
         F.split("w", "").alias("syms"), F.col("freq").cast("bigint")
     )
-    return _bpe_train_loop(
-        vocab, n_merges, checkpoint, driver_train_threshold, "bpe:vocab"
-    )
+    return _bpe_train_loop(vocab, n_merges, driver_train_threshold, "bpe:vocab")
 
 
 def _driver_vocab_probe(
@@ -1535,7 +1522,6 @@ def _driver_vocab_probe(
 def _bpe_train_loop(
     vocab: DataFrame,
     n_merges: int,
-    checkpoint: str,
     driver_train_threshold: int,
     ckpt_label: str,
 ) -> DataFrame:
@@ -1557,9 +1543,7 @@ def _bpe_train_loop(
             _bpe_greedy_driver(words, n_merges),
             "merge_rank bigint, a string, b string, pair_count bigint",
         )
-    vocab = vocab.transform(
-        stage_checkpoint, label=ckpt_label, strategy=checkpoint
-    )
+    vocab = vocab.transform(stage_checkpoint, label=ckpt_label)
 
     pair_expr = F.explode(
         F.expr(
@@ -1603,7 +1587,7 @@ def _bpe_train_loop(
 
         vocab = vocab.select(
             _merge_udf(a, b)(F.col("syms")).alias("syms"), "freq"
-        ).transform(stage_checkpoint, label="bpe:merge", strategy=checkpoint)
+        ).transform(stage_checkpoint, label="bpe:merge")
         merges.append((rank, a, b, int(cnt)))
 
     return spark.createDataFrame(
@@ -1803,7 +1787,6 @@ def bpe_bytes_learn_merges(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_merges: int = 8,
-    checkpoint: str = "local",
     word_freq: DataFrame | None = None,
     driver_train_threshold: int = 100_000,
 ) -> DataFrame:
@@ -1821,8 +1804,7 @@ def bpe_bytes_learn_merges(
         F.col("freq").cast("bigint"),
     )
     return _bpe_train_loop(
-        vocab, n_merges, checkpoint, driver_train_threshold,
-        "bpe_bytes:vocab",
+        vocab, n_merges, driver_train_threshold, "bpe_bytes:vocab"
     )
 
 
@@ -2213,7 +2195,6 @@ def wordpiece_learn_merges(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_merges: int = 8,
-    checkpoint: str = "local",
     word_freq: DataFrame | None = None,
     driver_train_threshold: int = 100_000,
 ) -> DataFrame:
@@ -2267,9 +2248,7 @@ def wordpiece_learn_merges(
             "merge_rank bigint, a string, b string, pair_count bigint, "
             "score_q bigint",
         )
-    vocab = vocab.transform(
-        stage_checkpoint, label="wp:vocab", strategy=checkpoint
-    )
+    vocab = vocab.transform(stage_checkpoint, label="wp:vocab")
 
     pair_expr = F.explode(
         F.expr(
@@ -2336,7 +2315,7 @@ def wordpiece_learn_merges(
 
         vocab = vocab.select(
             _merge_udf(a, b, merged)(F.col("syms")).alias("syms"), "freq"
-        ).transform(stage_checkpoint, label="wp:merge", strategy=checkpoint)
+        ).transform(stage_checkpoint, label="wp:merge")
         merges.append((rank, a, b, cnt, sq))
 
     spark = df.sparkSession

@@ -1328,7 +1328,6 @@ def containment_prefix_join(
     text_col: str,
     threshold_milli: int = 800,
     ngram: int = 3,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """EXACT asymmetric containment join: all ordered pairs (a, b),
     a ≠ b, with ``|S(a) ∩ S(b)| / |S(a)| ≥ t`` over word n-gram
@@ -1397,16 +1396,12 @@ def containment_prefix_join(
             )
         )
     # four consumers (df-count, prefix, posting list, verify sets):
-    # shingle the corpus once, not four times. checkpoint="reliable"
-    # makes the boundary survive executor loss at cluster scale
-    # ("local" blocks are unreplicated).
+    # shingle the corpus once, not four times.
     sets = (
         base.groupBy("_id")
         .agg(F.sort_array(F.collect_set("tok")).alias("_set"))
         .select("_id", "_set", F.size("_set").alias("_n"))
-        .transform(
-            stage_checkpoint, label="containment:sets", strategy=checkpoint
-        )
+        .transform(stage_checkpoint, label="containment:sets")
     )
     pairs = sets.select("_id", F.explode("_set").alias("tok"))
     dfreq = pairs.groupBy("tok").agg(F.count(F.lit(1)).alias("_df"))

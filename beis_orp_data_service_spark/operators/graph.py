@@ -90,7 +90,6 @@ def reachability(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """N-hop reachability with min-hop distances — the multi-hop
     extension of the Q13 1-hop traverse (the reference's TQL can chain
@@ -105,15 +104,10 @@ def reachability(
     the plan flat (every frame a LogicalRDD scan, no lineage growth);
     the per-level emptiness check is a scalar count, the standard
     driver action for iterative closure. Cycles terminate because a
-    revisited node is never re-expanded.
-
-    ``checkpoint``: stage-boundary strategy (``checkpointing``):
-    ``"local"`` truncates lineage into UNREPLICATED executor blocks —
-    fastest, but one lost executor mid-BFS kills the job;
-    ``"reliable"`` recovers from the distributed checkpoint dir."""
+    revisited node is never re-expanded."""
     visited = sources.select(
         F.col("node"), F.lit(0).cast("bigint").alias("hops")
-    ).transform(stage_checkpoint, label="reachability:init", strategy=checkpoint)
+    ).transform(stage_checkpoint, label="reachability:init")
     frontier = visited
     for h in range(1, max_hops + 1):
         nxt = (
@@ -121,15 +115,12 @@ def reachability(
             .select(F.col("dst").alias("node"), F.lit(h).cast("bigint").alias("hops"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .transform(
-                stage_checkpoint, label="reachability:frontier",
-                strategy=checkpoint,
-            )
+            .transform(stage_checkpoint, label="reachability:frontier")
         )
         if nxt.count() == 0:
             break
         visited = visited.unionByName(nxt).transform(
-            stage_checkpoint, label="reachability:visited", strategy=checkpoint
+            stage_checkpoint, label="reachability:visited"
         )
         frontier = nxt
     return visited
@@ -139,7 +130,6 @@ def shortest_paths(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    checkpoint: str = "local",
 ) -> DataFrame:
     """Weighted single/multi-source shortest paths, bounded hops —
     Bellman-Ford relaxation on DataFrames. Input: ``edges (src, dst,
@@ -155,12 +145,10 @@ def shortest_paths(
     (no per-round driver emptiness action, unlike :func:`reachability`
     where early exit pays for itself on shallow graphs);
     ``localCheckpoint`` per round keeps the plan flat. Negative-cycle
-    safety comes free from the hop bound. ``checkpoint``: "local"
-    dies with a lost executor mid-loop (unreplicated, lineage gone);
-    "reliable" re-reads the distributed checkpoint dir."""
+    safety comes free from the hop bound."""
     dist = sources.select(
         F.col("node"), F.lit(0).cast("bigint").alias("dist")
-    ).transform(stage_checkpoint, label="shortest_paths:init", strategy=checkpoint)
+    ).transform(stage_checkpoint, label="shortest_paths:init")
     for _ in range(max_hops):
         relaxed = dist.join(edges, dist.node == edges.src).select(
             F.col("dst").alias("node"),
@@ -170,10 +158,7 @@ def shortest_paths(
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .transform(
-                stage_checkpoint, label="shortest_paths:round",
-                strategy=checkpoint,
-            )
+            .transform(stage_checkpoint, label="shortest_paths:round")
         )
     return dist
 
@@ -687,7 +672,6 @@ def kcore(
     edges: DataFrame,
     k: int,
     rounds: int = 4,
-    checkpoint: str = "local",
     driver_threshold: int = 1_000_000,
 ) -> DataFrame:
     """k-core peeling (Seidman 1983; the standard cohesion filter for
@@ -708,13 +692,7 @@ def kcore(
     Per round: one explode + map-side-combined degree aggregate and
     two semi-joins — every stage keyed on the node, no window funnel.
     Input (a, b) canonical undirected edges. Output (node, degree):
-    degrees within the ``rounds``-peeled edge set.
-
-    ``checkpoint``: the boundary MUST truncate lineage here ("local" or
-    "reliable" — "persist" keeps lineage and re-inflates the 3^rounds
-    plan); "local" is unreplicated executor state, so at cluster scale
-    a lost executor mid-peel kills the job where "reliable" recovers
-    from the checkpoint dir."""
+    degrees within the ``rounds``-peeled edge set."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 1:
@@ -728,7 +706,7 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("degree"))
         )
 
-    e = edges.transform(stage_checkpoint, label="kcore:init", strategy=checkpoint)
+    e = edges.transform(stage_checkpoint, label="kcore:init")
     if driver_threshold:
         # adaptive driver-local peel (the dup_clusters convention):
         # probe the ALREADY-materialized canonical edge table with one
@@ -745,7 +723,7 @@ def kcore(
         e = (
             e.join(keep.select(F.col("node").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
-            .transform(stage_checkpoint, label="kcore:round", strategy=checkpoint)
+            .transform(stage_checkpoint, label="kcore:round")
         )
     return _degrees(e).select(
         F.col("node").cast("bigint"), F.col("degree").cast("bigint")

@@ -23,7 +23,7 @@ Spark-first shape:
   whole-stage-codegen built-ins; no UDF, no Python in the pair loop.
 - **Clustering reuses** :func:`~beis_orp_data_service_spark.operators.
   corpus.dup_clusters` (pointer-doubling min-label propagation,
-  O(log diameter) rounds, checkpoint-strategy parametrized).
+  O(log diameter) rounds, lineage truncated every round).
 
 Scores are emitted quantized (``round(score * 1e6)`` as BIGINT) so the
 DuckDB oracle twin compares exactly — same IEEE-double expression tree

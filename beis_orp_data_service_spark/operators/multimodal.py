@@ -395,7 +395,6 @@ def phash_band_pairs(
     hashes: DataFrame,
     n_bands: int = 4,
     max_dist: int = 10,
-    checkpoint: str | None = None,
 ) -> DataFrame:
     """Near-duplicate images by banded Hamming join: split the 64-bit
     phash into ``n_bands`` equal bands; any pair agreeing on at least
@@ -421,9 +420,7 @@ def phash_band_pairs(
         raise ValueError(f"n_bands must divide 64, got {n_bands}")
     width = 64 // n_bands
     mask = (1 << width) - 1
-    hashes = stage_checkpoint(
-        hashes, label="phash_media", strategy=checkpoint
-    )
+    hashes = stage_checkpoint(hashes, label="phash_media")
     banded = hashes.select(
         "media_id",
         "phash",

@@ -32,29 +32,11 @@ tests/test_behavior.py and tests/test_ranks.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from beis_orp_data_service_spark.checkpointing import stage_checkpoint
 
-
-def _pid_safe_strategy() -> str | None:
-    """Checkpoint strategy override for the pid-pinning boundaries here.
-
-    Rank CORRECTNESS (not just performance) depends on the range
-    partitioner's sampled split points — and therefore
-    ``spark_partition_id`` — being identical between the counts pass
-    and the ranking pass. The ``"persist"`` strategy keeps lineage, so
-    an executor loss can silently RECOMPUTE partitions through a fresh
-    ``repartitionByRange`` sample and misalign pids with the already-
-    broadcast offsets. ``"local"``/``"reliable"`` truncate
-    lineage (a lost block is a loud job failure / an FS re-read, never
-    a silent resample), so those pass through; ``"persist"`` is
-    upgraded to ``"reliable"``."""
-    env = os.environ.get("SPARK_GRAFT_CHECKPOINT", "local")
-    return "reliable" if env == "persist" else None
 
 def _guard_columns(df: DataFrame, names: list[str], func: str) -> None:
     """Fail fast if the caller's frame already carries a column this
@@ -116,7 +98,6 @@ def exact_global_ranks(
         ),
         eager=False,
         label=f"{label}:range_parts",
-        strategy=_pid_safe_strategy(),
     )
     # P-row pull: cumulative offset per range partition
     counts = sorted(
@@ -204,7 +185,6 @@ def prefix_sums(
         ),
         eager=False,  # the totals .collect() materializes it (one job)
         label=f"{label}:range_parts",
-        strategy=_pid_safe_strategy(),
     )
     totals = sorted(
         (r["_rnk_pid"], tuple(r[c] for c in sum_cols))
@@ -347,8 +327,7 @@ def grouped_exact_ranks(
 
     ``sort_cols`` must be a total order WITHIN each group (include a
     unique tiebreak). Same pid-pinning rule as the global variant: the
-    partitioned frame is stage-checkpointed with the persist-upgrade
-    guard (:func:`_pid_safe_strategy`) so the counts pass and the
+    partitioned frame is stage-checkpointed so the counts pass and the
     ranking pass see identical partition ids.
     """
     _guard_columns(df, [rank_col, total_col], "grouped_exact_ranks")
@@ -358,7 +337,6 @@ def grouped_exact_ranks(
         ).withColumn("_rnk_pid", F.spark_partition_id()),
         eager=False,  # one final action materializes it for BOTH consumers
         label=f"{label}:range_parts",
-        strategy=_pid_safe_strategy(),
     )
     cnt = part.groupBy(*group_cols, "_rnk_pid").agg(
         F.count(F.lit(1)).alias("_rnk_n")
@@ -462,7 +440,6 @@ def grouped_prefix_sums(
         ).withColumn("_rnk_pid", F.spark_partition_id()),
         eager=False,  # one final action materializes it for BOTH consumers
         label=f"{label}:range_parts",
-        strategy=_pid_safe_strategy(),
     )
     cnt = part.groupBy(*group_cols, "_rnk_pid").agg(
         *(F.sum(c).alias(f"_sum_{c}") for c in sum_cols)

@@ -156,8 +156,8 @@ def ingest(
     # ArrowEvalPython nodes in the unboundaried plan). The reference has the
     # same discipline physically — every Step Functions stage writes to
     # S3 before the next reads. On a cluster, swap the stage boundary
-    # for a parquet/Delta stage table (or checkpoint="reliable");
-    # "local" blocks are MEMORY_AND_DISK and cleaner-reclaimed when
+    # for a parquet/Delta stage table (or SPARK_GRAFT_CHECKPOINT=
+    # reliable); "local" blocks are MEMORY_AND_DISK and cleaner-reclaimed when
     # the frames go out of scope.
     converted = convert_stage(binaries).transform(
         stage_checkpoint, label="ingest:converted"

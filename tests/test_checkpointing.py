@@ -1,12 +1,14 @@
-"""stage_checkpoint strategies: the iterative
-operators expose checkpoint="local"|"reliable"|"persist"; results must
-be identical across strategies (the strategy changes fault tolerance,
-never semantics), and SPARK_GRAFT_AUDIT=1 must record pre-checkpoint
-plan fragments (ask #1's full-lineage audit hook)."""
+"""stage_checkpoint policy: ``SPARK_GRAFT_CHECKPOINT`` ("local" |
+"reliable") decides every stage boundary. Results must be identical
+across strategies (the strategy changes fault tolerance, never
+semantics), "reliable" must reach every boundary of every iterative
+operator, an unknown value must fail before any work, and
+SPARK_GRAFT_AUDIT=1 must record pre-checkpoint plan fragments (the
+full-lineage audit hook)."""
 
 from __future__ import annotations
 
-import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,10 +17,11 @@ from beis_orp_data_service_spark import checkpointing as ck
 from beis_orp_data_service_spark.operators import corpus as corpus_ops
 from beis_orp_data_service_spark.operators import dedup as dd
 from beis_orp_data_service_spark.operators import graph as g
+from beis_orp_data_service_spark.operators import multimodal as mm
+from tests.conftest import spark_jobs
 
 
-@pytest.fixture()
-def edges(spark):
+def _edges(spark):
     # chain 0-1-2-3-4 + triangle 10-11-12 + clique {20,21,22,23}
     rows = (
         [(i, i + 1) for i in range(4)]
@@ -28,102 +31,140 @@ def edges(spark):
     return spark.createDataFrame(rows, "a bigint, b bigint")
 
 
-def _directed(edges):
-    return edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+def _directed(spark):
+    return _edges(spark).select(F.col("a").alias("src"), F.col("b").alias("dst"))
 
 
-def test_kcore_equal_across_strategies(spark, edges):
-    """k-core: local / reliable / persist-free paths agree exactly.
-    (persist is excluded by design here: kcore's 3-refs-per-round shape
-    needs a lineage-TRUNCATING boundary — documented in the docstring.)"""
-    base = sorted(map(tuple, g.kcore(edges, k=2, rounds=3).collect()))
-    rel = sorted(
-        map(tuple, g.kcore(edges, k=2, rounds=3, checkpoint="reliable").collect())
-    )
-    assert base == rel
-    assert base  # the clique + triangle survive k=2
+def _source(spark):
+    return spark.createDataFrame([(0,)], "node bigint")
 
 
-def test_reachability_and_shortest_paths_equal_across_strategies(spark, edges):
-    src = spark.createDataFrame([(0,)], "node bigint")
-    de = _directed(edges)
-    for fn, kw in ((g.reachability, {}), (g.shortest_paths, {})):
-        e = de if fn is g.reachability else de.withColumn("w", F.lit(2))
-        base = sorted(map(tuple, fn(e, src, max_hops=3).collect()))
-        rel = sorted(
-            map(tuple, fn(e, src, max_hops=3, checkpoint="reliable").collect())
-        )
-        per = sorted(
-            map(tuple, fn(e, src, max_hops=3, checkpoint="persist").collect())
-        )
-        assert base == rel == per
-        assert base
-
-
-def test_dup_clusters_and_bpe_equal_across_strategies(spark):
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 8)], "a_id bigint, b_id bigint"
-    )
-    nodes = spark.createDataFrame([(i,) for i in range(1, 10)], "doc_id bigint")
-    base = sorted(map(tuple, corpus_ops.dup_clusters(pairs, nodes).collect()))
-    rel = sorted(
-        map(
-            tuple,
-            corpus_ops.dup_clusters(pairs, nodes, checkpoint="reliable").collect(),
-        )
-    )
-    assert base == rel
-
-    docs = spark.createDataFrame(
+def _words(spark):
+    return spark.createDataFrame(
         [(1, "low low lower lowest"), (2, "new newer newest low")],
         "doc_id bigint, text string",
     )
-    b1 = sorted(map(tuple, corpus_ops.bpe_learn_merges(docs, n_merges=4).collect()))
-    b2 = sorted(
-        map(
-            tuple,
-            corpus_ops.bpe_learn_merges(
-                docs, n_merges=4, checkpoint="reliable"
-            ).collect(),
-        )
-    )
-    assert b1 == b2 and len(b1) == 4
 
 
-def test_containment_join_equal_across_strategies(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-            (3, "completely different words here nothing shared at all"),
-        ],
-        "doc_id bigint, text string",
-    )
-    base = sorted(
-        map(tuple, dd.containment_prefix_join(docs, "doc_id", "text").collect())
-    )
-    rel = sorted(
-        map(
-            tuple,
-            dd.containment_prefix_join(
-                docs, "doc_id", "text", checkpoint="reliable"
-            ).collect(),
+_BASE_HASH = 0x0123456789ABCDEF
+
+# Every operator that routes a loop or a multi-consumer frame through
+# stage_checkpoint, with its driver-local shortcut switched off so the
+# distributed boundaries actually run.
+OPERATORS = {
+    "reachability": lambda s: g.reachability(_directed(s), _source(s), max_hops=3),
+    "shortest_paths": lambda s: g.shortest_paths(
+        _directed(s).withColumn("w", F.lit(2)), _source(s), max_hops=3
+    ),
+    "kcore": lambda s: g.kcore(_edges(s), k=2, rounds=3, driver_threshold=0),
+    "dup_clusters": lambda s: corpus_ops.dup_clusters(
+        s.createDataFrame([(1, 2), (2, 3), (7, 8)], "a_id bigint, b_id bigint"),
+        s.createDataFrame([(i,) for i in range(1, 10)], "doc_id bigint"),
+        driver_closure_threshold=0,
+    ),
+    "bpe_learn_merges": lambda s: corpus_ops.bpe_learn_merges(
+        _words(s), n_merges=4, driver_train_threshold=0
+    ),
+    "bpe_bytes_learn_merges": lambda s: corpus_ops.bpe_bytes_learn_merges(
+        _words(s), n_merges=4, driver_train_threshold=0
+    ),
+    "wordpiece_learn_merges": lambda s: corpus_ops.wordpiece_learn_merges(
+        _words(s), n_merges=4, driver_train_threshold=0
+    ),
+    "containment_prefix_join": lambda s: dd.containment_prefix_join(
+        s.createDataFrame(
+            [
+                (1, "alpha beta gamma delta epsilon zeta"),
+                (2, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+                (3, "completely different words here nothing shared at all"),
+            ],
+            "doc_id bigint, text string",
+        ),
+        "doc_id",
+        "text",
+    ),
+    "phash_band_pairs": lambda s: mm.phash_band_pairs(
+        s.createDataFrame(
+            [(1, _BASE_HASH), (2, _BASE_HASH ^ 0b101), (3, ~_BASE_HASH)],
+            mm.PHASH_SCHEMA,
         )
-    )
+    ),
+}
+
+
+def _spy(monkeypatch, spark, method):
+    """Count calls of the session's DataFrame class ``method`` (in
+    Spark 4.1 that is the classic DataFrame, not
+    ``pyspark.sql.DataFrame``, so patching the latter sees nothing)."""
+    cls = type(spark.range(1))
+    real = getattr(cls, method)
+    calls = []
+
+    def spy(self, *a, **kw):
+        calls.append(method)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(cls, method, spy)
+    return calls
+
+
+@pytest.mark.parametrize("op", sorted(OPERATORS))
+def test_reliable_equals_local(spark, monkeypatch, op):
+    """The env var alone switches every boundary: under "reliable" no
+    boundary falls back to an unreplicated ``localCheckpoint``, and the
+    result is the one "local" gives."""
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", "local")
+    base = sorted(map(tuple, OPERATORS[op](spark).collect()))
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", "reliable")
+    local = _spy(monkeypatch, spark, "localCheckpoint")
+    reliable = _spy(monkeypatch, spark, "checkpoint")
+    rel = sorted(map(tuple, OPERATORS[op](spark).collect()))
+    assert local == []
+    assert reliable  # the operator did reach a stage boundary
     assert base == rel
-    assert any(a == 1 and b == 2 for a, b, _ in base)  # doc1 ⊂ doc2
+    assert base
 
 
-def test_unknown_strategy_raises(spark):
-    df = spark.range(3)
-    with pytest.raises(ValueError, match="unknown checkpoint strategy"):
-        ck.stage_checkpoint(df, strategy="bogus")
+def test_unknown_strategy_raises(spark, monkeypatch):
+    """A bad value ("persist" included) fails loudly, naming the valid
+    ones, before the audit hook plans the frame and before any Spark
+    job runs."""
+    monkeypatch.setenv("SPARK_GRAFT_AUDIT", "1")
+    ck.drain_audit_fragments()
+    df = spark.range(3).groupBy((F.col("id") % 2).alias("k")).count()
+    for value in ("bogus", "persist", ""):
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", value)
+
+        def run():
+            with pytest.raises(ValueError, match=r"\('local', 'reliable'\)"):
+                ck.stage_checkpoint(df, label="bad")
+
+        _, n_jobs = spark_jobs(spark, run)
+        assert n_jobs == 0, value
+        assert ck.drain_audit_fragments() == [], value
+
+
+def test_reachability_lineage_stays_bounded(spark, monkeypatch):
+    """Every round truncates lineage: the returned frame's analyzed
+    plan does not grow with the hop count (expression ids are masked —
+    only their digit count differs between runs)."""
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT", raising=False)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src bigint, dst bigint"
+    )
+
+    def plan_len(hops):
+        out = g.reachability(chain, _source(spark), max_hops=hops)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return len(re.sub(r"#\d+L?", "#", plan))
+
+    assert plan_len(2) == plan_len(6)
 
 
 def test_audit_mode_records_pre_checkpoint_fragments(spark, monkeypatch):
     """SPARK_GRAFT_AUDIT=1: every stage boundary appends its
     pre-checkpoint physical plan, so audit_plans.py can assert kernel
-    counts over the FULL lineage (the round-5 blind spot)."""
+    counts over the FULL lineage."""
     monkeypatch.setenv("SPARK_GRAFT_AUDIT", "1")
     ck.drain_audit_fragments()
     edges = spark.createDataFrame([(1, 2), (2, 3)], "a bigint, b bigint")
