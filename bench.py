@@ -49,58 +49,46 @@ def read_loadavg() -> list[float] | None:
         return None  # non-Linux host: field stays null, policy skips it
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
+def time_query(spark, fn, sf_dir: str, reps: int) -> list[float]:
+    """Wall seconds of each of ``reps`` noop-sink materializations of
+    ``fn(spark, sf_dir)``."""
+    samples = []
+    for _ in range(reps):
+        t0 = time.time()
+        materialize(fn(spark, sf_dir))
+        samples.append(time.time() - t0)
+    return samples
 
-    # optional subset mode (argv = query names): re-measure specific
-    # queries in isolation — e.g. to adjudicate a flagged ratio from
-    # scripts/bench_compare.py on an idle host. Subset runs never
-    # overwrite BENCH_LOCAL.json (the full-registry artifact).
-    subset = sys.argv[1:]
-    if subset:
-        unknown = [q for q in subset if q not in declared.REGISTRY]
-        if unknown:
-            raise SystemExit(f"unknown queries: {unknown}")
 
-    spark = get_spark("bench")
-    timings: dict[str, float] = {}
-    spread: dict[str, list[float]] = {}
-    load_start = read_loadavg()
-
-    # warm the JVM + parquet footers once so per-query numbers are steady
-    materialize(declared.q_search_flagship(spark, sf_dir))
-
-    total = 0.0
-    registry = (
-        {q: declared.REGISTRY[q] for q in subset}
-        if subset
-        else declared.REGISTRY
-    )
-    for name, qd in registry.items():
-        samples = []
-        for _ in range(reps):
-            t0 = time.time()
-            materialize(qd.fn(spark, sf_dir))
-            samples.append(time.time() - t0)
-        med = statistics.median(samples)
-        timings[name] = round(med, 3)
-        # rep spread [min, median, max]: a flag whose rep MIN clears the
-        # bench_compare policy line is in-run contention (the plan itself
-        # ran fast at least once), adjudicable without a re-measure
-        spread[name] = [round(min(samples), 3), round(med, 3), round(max(samples), 3)]
-        total += med
-
+def bench_output(
+    samples: dict[str, list[float]],
+    *,
+    sf: float | None,
+    reps: int,
+    load_start: list[float] | None,
+    load_end: list[float] | None,
+    subset: bool,
+) -> tuple[dict, list[str]]:
+    """The full record for BENCH_LOCAL.json and the stdout lines, from
+    each query's rep samples (seconds)."""
+    timings = {
+        name: round(statistics.median(s), 3) for name, s in samples.items()
+    }
+    # rep spread [min, median, max]: a flag whose rep MIN clears the
+    # bench_compare policy line is in-run contention (the plan itself
+    # ran fast at least once), adjudicable without a re-measure
+    spread = {
+        name: [round(min(s), 3), timings[name], round(max(s), 3)]
+        for name, s in samples.items()
+    }
     record = {
         "metric": "declared_queries_total_wall",
-        "value": round(total, 3),
+        "value": round(sum(statistics.median(s) for s in samples.values()), 3),
         "unit": "sec",
         "queries": timings,
         "spread": spread,
         "load_start": load_start,
-        "load_end": read_loadavg(),
+        "load_end": load_end,
         "sf": sf,
         "reps": reps,
         "stat": "median",
@@ -123,7 +111,7 @@ def main() -> None:
         # BENCH_rN.json keeps only this line, and r11-r13 all needed
         # manual contention adjudication of exactly that artifact
         "load_start": load_start,
-        "load_end": record["load_end"],
+        "load_end": load_end,
         "slowest10": slowest10,
         # no-silent-caps: queries whose declared form samples their input
         # to bound bench cost (the OPERATORS are unsampled)
@@ -138,6 +126,55 @@ def main() -> None:
     if subset:
         record["subset"] = True
         summary["subset"] = True
+    # the rep-spread map stays FILE-ONLY (r14 verdict #1): printing it
+    # roughly doubled the record line and scrolled the per-query map out
+    # of the driver's tail capture in r14. BENCH_LOCAL.json keeps it.
+    stdout_record = {k: v for k, v in record.items() if k != "spread"}
+    # summary must be the FINAL line: the driver captures only the tail
+    # of stdout and parses the last line — it carries the per-query
+    # median map so PERF per_query/scaling can be adjudicated.
+    return record, [json.dumps(stdout_record), json.dumps(summary)]
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else None
+
+    # optional subset mode (argv = query names): re-measure specific
+    # queries in isolation — e.g. to adjudicate a flagged ratio from
+    # scripts/bench_compare.py on an idle host. Subset runs never
+    # overwrite BENCH_LOCAL.json (the full-registry artifact).
+    subset = sys.argv[1:]
+    if subset:
+        unknown = [q for q in subset if q not in declared.REGISTRY]
+        if unknown:
+            raise SystemExit(f"unknown queries: {unknown}")
+
+    spark = get_spark("bench")
+    load_start = read_loadavg()
+
+    # warm the JVM + parquet footers once so per-query numbers are steady
+    materialize(declared.q_search_flagship(spark, sf_dir))
+
+    registry = (
+        {q: declared.REGISTRY[q] for q in subset}
+        if subset
+        else declared.REGISTRY
+    )
+    samples = {
+        name: time_query(spark, qd.fn, sf_dir, reps)
+        for name, qd in registry.items()
+    }
+    record, lines = bench_output(
+        samples,
+        sf=sf,
+        reps=reps,
+        load_start=load_start,
+        load_end=read_loadavg(),
+        subset=bool(subset),
+    )
     local = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"),
@@ -148,15 +185,8 @@ def main() -> None:
                 json.dump(record, f, indent=1)
     except OSError:
         pass  # read-only checkout: stdout still carries the record
-    # the rep-spread map stays FILE-ONLY (r14 verdict #1): printing it
-    # roughly doubled the record line and scrolled the per-query map out
-    # of the driver's tail capture in r14. BENCH_LOCAL.json keeps it.
-    stdout_record = {k: v for k, v in record.items() if k != "spread"}
-    print(json.dumps(stdout_record), flush=True)
-    # summary must be the FINAL line: the driver captures only the tail
-    # of stdout and parses the last line — it now carries the per-query
-    # median map so PERF per_query/scaling can be adjudicated.
-    print(json.dumps(summary), flush=True)
+    for line in lines:
+        print(line, flush=True)
 
 
 if __name__ == "__main__":

@@ -14,6 +14,7 @@ Prints one JSON line describing exactly how far it got:
      "blocked": true/false, "block_stage": "..."}
 
 Run it on any box:  python scripts/real_model_smoke.py
+(``probe()`` alone returns the report without writing it.)
 On a box with network + transformers, all steps report "ok" and the
 env-flagged pytest harness is the full check:
 
@@ -42,7 +43,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 TINY_MODEL = "sshleifer/tiny-t5"  # public tiny seq2seq; seconds on CPU
 
 
-def main() -> int:
+def probe() -> dict:
+    """Run every probe stage and return the report; writes nothing."""
     steps: dict[str, str] = {}
 
     def record(stage: str, fn, requires: tuple[str, ...] = ()):
@@ -109,6 +111,11 @@ def main() -> int:
             "install_allowed": False,
         },
     }
+    return report
+
+
+def main() -> int:
+    report = probe()
     print(json.dumps(report))
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "REAL_MODEL_SMOKE.json"), "w") as f:

@@ -1,11 +1,10 @@
 """Empirical scaling probe: measure, don't claim.
 
-Every 100 TB statement in this repo was design + plan-shape until this
-script: it times the slowest bench queries on the base fixture AND on a
-``factor``× self-authored inflation of it, and reports the wall-clock
-ratio per query. For a data-linear (or n·log n) operator the ratio must
-stay ≤ ~1.5 × factor; anything above is a superlinearity the plan
-audit can't see (degenerate hot band keys, accidental all-pairs growth,
+Times registry queries on a base fixture AND on a ``factor``×
+self-authored inflation of it, and reports the wall-clock ratio per
+query. For a data-linear (or n·log n) operator the ratio must stay
+≤ ~1.5 × factor; anything above is a superlinearity the plan audit
+can't see (degenerate hot band keys, accidental all-pairs growth,
 driver pulls scaling with the corpus).
 
 Inflation is deterministic replication with PERTURBED ids/text/vectors
@@ -18,21 +17,36 @@ not engine scaling). Embedding replicas get per-(dim, k) deterministic
 ±25% scaling, events get offset ids/users. Untouched tables are
 symlinked.
 
-Usage: python scripts/scaling_probe.py [base_sf_dir] [factor] [reps]
-Defaults: /root/testdata/sf0.1, 10, 2 (best-of-reps per point).
-Writes SCALING.md at the repo root.
+Each factor has one table in SCALING.md: the 10× table opens the file,
+any other factor lives in a ``## {factor}× tier`` section. A run
+rewrites only its factor's table; every other byte of the file stays.
+
+- Without ``--queries`` (the coverage run): measures the ~20 slowest
+  queries of BENCH_LOCAL.json, every registry query without a row in
+  this factor's table, and the over-age carried rows; exits 2 if any
+  registry query is still without a row.
+- With ``--queries``: measures exactly the named queries.
+
+Either way the other rows of the table carry forward one run older.
+
+Usage:
+    python scripts/scaling_probe.py --base SF_DIR --factor N \\
+        [--reps R] [--queries Q [Q ...]]
+
+Exit status: 0 clean, 1 outliers, 2 coverage gap.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import random
-import shutil
 import sys
-import time
+from typing import NamedTuple
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -43,19 +57,16 @@ from beis_orp_data_service_spark.catalog import (  # noqa: E402
     table_path,
 )
 from beis_orp_data_service_spark.session import get_spark  # noqa: E402
+from bench import materialize, time_query  # noqa: E402
 
+SCALING_MD = os.path.join(REPO, "SCALING.md")
+BENCH_LOCAL = os.path.join(REPO, "BENCH_LOCAL.json")
+SCALE_DIR = os.path.join(REPO, ".scale")
+
+MAIN_FACTOR = 10  # the table that opens SCALING.md
 STRIDE = 10**12  # replica id offset: keeps % predicates per-replica-stable
 INFLATED = ("documents", "embeddings", "events", "part")
 
-# Coverage is DERIVED, not hand-listed (a hand-extended include list
-# missed late-round additions twice in a row before this).
-# Every registry query that has no measured row in the COMMITTED
-# SCALING.md is force-included this run; previously measured rows are
-# carried forward into the regenerated table (marked 'carried'), so
-# "absent from SCALING.md" always means "never probed". After the
-# merge the script FAILS LOUDLY (exit 2) if any gradeable registry
-# query still lacks a row.
-#
 # part is inflated (perturbed p_name per replica) so er_pairs/
 # er_clusters see real data growth: replicas land in NEW name-prefix
 # blocks, the way a growing catalogue grows name diversity — block
@@ -131,74 +142,6 @@ GROWTH_CAUSES = {
     "rows at any scale",
 }
 
-
-def parse_measured_rows(
-    path: str,
-) -> dict[str, tuple[float, float, float, "float | None", int]]:
-    """Query name -> (base_s, big_s, ratio, rows_ratio, age), for every
-    measured row of the committed SCALING.md main table (rows whose
-    2nd..4th cells parse as floats). ``rows_ratio`` is the output-rows
-    growth column (None for rows measured before it existed — rendered
-    as '—' and re-measured on rotation). ``age`` counts probe runs
-    since the row was last measured (0 = fresh this run; rows from
-    files predating the age column read as 1). Used to derive the
-    never-probed set, to carry prior measurements into the regenerated
-    file (verdicts are RE-derived from the numbers under the current
-    grading rules, so a grading change never fossilizes a stale
-    verdict string), and to rotate over-age carried rows back into the
-    fresh set."""
-    rows: dict[str, tuple[float, float, float, float | None, int]] = {}
-    if not os.path.exists(path):
-        return rows
-    with open(path) as f:
-        for line in f:
-            cells = [c.strip() for c in line.rstrip("\n").split("|")]
-            # new: '| name | b | g | r | rows | age | verdict |' -> 9
-            # old: '| name | b | g | r | age | verdict |'        -> 8
-            if len(cells) < 6 or cells[1] in ("query", "---", ""):
-                continue
-            try:
-                vals = float(cells[2]), float(cells[3]), float(cells[4])
-            except ValueError:
-                continue
-            # registry-scoped: the simhash-diagnosis table's scale rows
-            # (| 1× | ... |) also parse as floats — only real query
-            # names count as measured coverage
-            if cells[1] not in declared.REGISTRY:
-                continue
-            rows_ratio: float | None = None
-            age_cell = 5
-            if len(cells) >= 9:  # has the rows× column
-                age_cell = 6
-                try:
-                    rows_ratio = float(cells[5])
-                except ValueError:
-                    rows_ratio = None
-            try:
-                age = int(cells[age_cell])
-            except (ValueError, IndexError):
-                age = 1  # pre-age-column file: measured one run ago
-            rows[cells[1]] = (*vals, rows_ratio, age)
-    return rows
-
-
-def carried_sections(path: str, regenerated: set[str]) -> list[str]:
-    """Every '## ...' section of the old SCALING.md whose title this
-    script does NOT regenerate (hand-written round notes, the
-    deep_probe.py 30x appendix) — preserved verbatim so a probe re-run
-    never silently drops analysis that lives only in the file."""
-    if not os.path.exists(path):
-        return []
-    keep: list[str] = []
-    keeping = False
-    with open(path) as f:
-        for line in f:
-            line = line.rstrip("\n")
-            if line.startswith("## "):
-                keeping = line[3:].strip() not in regenerated
-            if keeping:
-                keep.append(line)
-    return keep
 ALPHA = "aeiounrst"  # ~50% of English letter mass — permuting it drops
 #                      char-5-shingle Jaccard vs the original below any
 #                      dedup threshold in the registry
@@ -211,16 +154,35 @@ SF_INDEPENDENT = {"stream_ingest_e2e", "scd_changes", "scd_time_travel",
                   "ingest_e2e", "stream_tumbling", "stream_session"}
 
 
+class Measured(NamedTuple):
+    """One table row: best wall seconds at each size, their ratio, the
+    output-rows ratio (None for rows measured before that column
+    existed) and ``age`` = probe runs since measured (0 = this run)."""
+
+    base_s: float
+    big_s: float
+    ratio: float
+    rows_ratio: float | None
+    age: int
+
+
 def _perm(k: int) -> str:
     chars = list(ALPHA)
     random.Random(k).shuffle(chars)
     return "".join(chars)
 
 
+def fixture_dir(base: str, factor: int) -> str:
+    """Inflation cache entry for ``base`` at ``factor``: keyed by both,
+    so a run on another base never reuses this one's fixture."""
+    name = os.path.basename(os.path.normpath(os.path.abspath(base)))
+    return os.path.join(SCALE_DIR, f"{name}-x{factor}")
+
+
 def inflate(spark, src: str, dst: str, factor: int) -> None:
     os.makedirs(dst, exist_ok=True)
     for t in TABLES:
-        sp = table_path(src, t)
+        sp = os.path.abspath(table_path(src, t))
         if not os.path.exists(sp):
             continue
         dp = table_path(dst, t)
@@ -230,8 +192,8 @@ def inflate(spark, src: str, dst: str, factor: int) -> None:
             continue
         if os.path.islink(dp):
             os.unlink(dp)  # table newly promoted to INFLATED: rebuild
-        if os.path.exists(dp):
-            continue  # reuse a previously built fixture
+        if os.path.exists(os.path.join(dp, "_SUCCESS")):
+            continue  # reuse a completely written fixture only
         base = load_table(spark, src, t)
         parts = []
         for k in range(factor):
@@ -312,147 +274,214 @@ def inflate(spark, src: str, dst: str, factor: int) -> None:
         print(f"inflated {t}: {factor}x -> {dp}")
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def split_sections(lines: list[str]) -> list[tuple[str | None, list[str]]]:
+    """(title, lines) per '## title' section, heading line included;
+    the text before the first heading comes first, titled None."""
+    parts: list[tuple[str | None, list[str]]] = [(None, [])]
+    for line in lines:
+        if line.startswith("## "):
+            parts.append((line[3:].strip(), []))
+        parts[-1][1].append(line)
+    return parts
 
 
-def simhash_bucket_stats(spark, sf_dir: str) -> dict:
-    """Band-bucket occupancy for the simhash_pairs query (round-6 ask
-    #4): is its 10× wall-ratio pair-OUTPUT growth (linear, fine) or a
-    degenerate band bucket (quadratic-in-bucket, needs Manku
-    block-splitting)? Candidate pairs = Σ n·(n−1)/2 over (band_idx,
-    band_val) buckets — the join's actual work."""
-    from beis_orp_data_service_spark.operators import dedup as dd
-
-    docs = load_table(spark, sf_dir, "documents")
-    fp = dd.simhash_table(docs, "doc_id", "text", n_bits=48)
-    bands = fp.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.expr(
-                            f"(simhash DIV {1 << (12 * i)}) % 4096"
-                        ).alias("band_val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band_idx", "b.band_val")
-    occ = bands.groupBy("band_idx", "band_val").count()
-    s = occ.agg(
-        F.count("*").alias("n_buckets"),
-        F.max("count").alias("max_bucket"),
-        F.expr("percentile_approx(count, 0.99)").alias("p99_bucket"),
-        F.sum(F.expr("count * (count - 1) DIV 2")).alias("cand_pairs"),
-    ).first()
-    n_out = declared.REGISTRY["simhash_pairs"].fn(spark, sf_dir).count()
-    return {
-        "n_docs": docs.count(),
-        "n_buckets": s.n_buckets,
-        "max_bucket": s.max_bucket,
-        "p99_bucket": s.p99_bucket,
-        "cand_pairs": int(s.cand_pairs),
-        "out_pairs": n_out,
-    }
+def write_section(path: str, title: str | None, body: list[str]) -> None:
+    """Replace section ``title`` (None: the text before the first
+    heading) with ``body``, or append it as a new section; every other
+    byte of the file stays as it was."""
+    lines: list[str] = []
+    if os.path.exists(path):
+        with open(path) as f:
+            lines = f.read().splitlines()
+    parts = split_sections(lines)
+    new = _rstrip_blank(body if title is None else [f"## {title}", "", *body])
+    for i, (t, old) in enumerate(parts):
+        if t == title:
+            n_blank = len(old) - len(_rstrip_blank(old))
+            parts[i] = (t, new + [""] * n_blank)
+            break
+    else:
+        last = _rstrip_blank(parts[-1][1])
+        parts[-1] = (parts[-1][0], last + [""] if last else last)
+        parts.append((title, new))
+    with open(path, "w") as f:
+        f.write("\n".join(x for _, part in parts for x in part) + "\n")
 
 
-def main() -> int:
-    base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    # optional trailing query names (the check_oracle convention):
-    # force those rows into the FRESH set this run. An optimization
-    # round rewrites an operator's scale shape without making it slow
-    # enough to auto-select — without a force list its carried
-    # pre-rewrite row would keep answering for code that no longer
-    # exists (it aged into rotation only 3 probes later).
-    forced = sys.argv[4:]
-    unknown = [q for q in forced if q not in declared.REGISTRY]
-    if unknown:
-        raise SystemExit(f"unknown queries: {unknown}")
-    dst = f"/root/repo/.scale/x{factor}"
+def _rstrip_blank(lines: list[str]) -> list[str]:
+    end = len(lines)
+    while end and not lines[end - 1].strip():
+        end -= 1
+    return lines[:end]
 
-    with open("/root/repo/BENCH_LOCAL.json") as f:
-        bench = json.load(f)
-    by_cost = [
-        k for k, _ in sorted(bench["queries"].items(), key=lambda kv: -kv[1])
-    ]
-    # slowest-10 regardless of kind (round-5 scope), plus the next-10
-    # most expensive DATA-SCALING queries (round-6 ask #5: skip the
-    # sf-independent fixtures when widening — their ratio ~1 is a
+
+def _num(cell: str | None, kind=float):
+    try:
+        return kind(cell)
+    except (TypeError, ValueError):
+        return None
+
+
+def parse_rows(lines: list[str]) -> dict[str, Measured]:
+    """Query name -> Measured for every registry row of the tables in
+    ``lines`` (one factor's section). Cells are read by their header's
+    column names, so rows written before the ``rows×`` column read
+    rows_ratio None and rows written before the ``age`` column read
+    age 1. Rows that are not registry queries (diagnosis tables'
+    ``| 1× | ...`` rows) are ignored."""
+    rows: dict[str, Measured] = {}
+    cols: list[str] = []
+    for line in lines:
+        if not line.startswith("|"):
+            continue
+        cells = [c.strip() for c in line.strip().strip("|").split("|")]
+        if cells[0] == "query":
+            cols = cells
+            continue
+        if cells[0] not in declared.REGISTRY or len(cells) != len(cols):
+            continue
+        nums = [_num(c) for c in cells[1:4]]
+        if None in nums:
+            continue
+        rec = dict(zip(cols, cells))
+        age = _num(rec.get("age"), int)
+        rows[cells[0]] = Measured(
+            *nums, _num(rec.get("rows×")), 1 if age is None else age
+        )
+    return rows
+
+
+def select(
+    prior: dict[str, Measured], by_cost: list[str], queries: list[str]
+) -> list[str]:
+    """The queries this run measures. Named ``queries``: exactly
+    those. Otherwise the coverage run: the 10 slowest of ``by_cost``
+    plus the next 10 data-scaling ones, every registry query without
+    a ``prior`` row, and the carried rows that would pass
+    MAX_CARRY_AGE (oldest first, at most ROTATE_CAP)."""
+    if queries:
+        return list(dict.fromkeys(queries))
+    # slowest-10 regardless of kind, plus the next-10 most expensive
+    # DATA-SCALING queries (the sf-independent fixtures' ratio ~1 is a
     # design property, not a measurement)
-    slowest = by_cost[:10] + [
+    chosen = by_cost[:10] + [
         k for k in by_cost[10:] if k not in SF_INDEPENDENT
     ][:10]
-    slowest += [q for q in forced if q not in slowest]
-    # registry-diff coverage: anything never
-    # measured in the committed SCALING.md runs this round, no hand list
-    prior_rows = parse_measured_rows("/root/repo/SCALING.md")
-    never_probed = sorted(
-        k
-        for k in declared.REGISTRY
-        if k not in prior_rows and k not in slowest
+    never = sorted(
+        k for k in declared.REGISTRY if k not in prior and k not in chosen
     )
-    if never_probed:
-        print(f"never-probed (force-included): {never_probed}")
-    slowest += never_probed
-    # staleness rotation: carried rows past MAX_CARRY_AGE re-measure,
-    # oldest first (capped) — without this a regression in an already-
-    # probed operator would hide behind its carried row forever
+    if never:
+        print(f"never-probed (force-included): {never}")
+    # without rotation a regression in an already-probed operator
+    # would hide behind its carried row forever
     stale = sorted(
         (
             k
-            for k in prior_rows
-            if k not in slowest and prior_rows[k][4] + 1 > MAX_CARRY_AGE
+            for k in prior
+            if k not in chosen and prior[k].age + 1 > MAX_CARRY_AGE
         ),
-        key=lambda k: (-prior_rows[k][4], k),
+        key=lambda k: (-prior[k].age, k),
     )[:ROTATE_CAP]
     if stale:
         print(f"over-age carried rows (re-probed): {stale}")
-    slowest += stale
+    return chosen + never + stale
 
-    spark = get_spark("scaling-probe")
-    inflate(spark, base, dst, factor)
 
-    # warm once per size so footer/JVM costs don't land on query 1
-    materialize(declared.q_search_flagship(spark, base))
-    materialize(declared.q_search_flagship(spark, dst))
+def merge(
+    fresh: dict[str, Measured], prior: dict[str, Measured]
+) -> dict[str, Measured]:
+    """This run's table: fresh rows in measured order, then every other
+    prior row by name, carried one run older."""
+    carried = {
+        k: m._replace(age=m.age + 1)
+        for k, m in sorted(prior.items())
+        if k not in fresh
+    }
+    return {**fresh, **carried}
 
-    rows = []
-    for name in slowest:
-        fn = declared.REGISTRY[name].fn
-        t = {}
-        n = {}
-        for label, d in (("base", base), ("big", dst)):
-            best = float("inf")
-            for _ in range(reps):
-                t0 = time.time()
-                materialize(fn(spark, d))
-                best = min(best, time.time() - t0)
-            t[label] = best
-            # growth attribution: OUTPUT rows at each size, so wall
-            # growth separates mechanically into engine work vs result
-            # growth (one extra execution per size; probe is offline)
-            n[label] = fn(spark, d).count()
-        ratio = t["big"] / t["base"] if t["base"] > 0 else float("inf")
-        rows_ratio = n["big"] / max(1, n["base"])
-        rows.append((name, t["base"], t["big"], ratio, rows_ratio))
-        print(
-            f"{name}: {t['base']:.2f}s -> {t['big']:.2f}s  ratio "
-            f"{ratio:.2f}  rows {n['base']} -> {n['big']} "
-            f"({rows_ratio:.2f}x)"
+
+def grade(
+    name: str, ratio: float, rows_ratio: float | None, factor: int
+) -> tuple[str, int]:
+    """Verdict text and outlier count for one row, fresh or carried.
+    Wall growth beyond output growth (ratio > 2 and > 2× rows ratio)
+    needs a GROWTH_CAUSES entry or counts as an outlier; rows at wall
+    ratio ≤ 2 are exempt — at probe scale they measure the JVM floor,
+    not engine scaling."""
+    if name in SF_INDEPENDENT:
+        return "sf-independent fixture (not graded)", 0
+    if name in QUADRATIC_BY_DESIGN:
+        bar = 1.5 * factor * factor
+        ok = (
+            "OK (pair-quadratic by design: sampled all-pairs kernel "
+            f"demo, graded vs 1.5·{factor}²)"
         )
+        bad = "**OUTLIER** — kernel itself degraded"
+    else:
+        bar, ok, bad = 1.5 * factor, "OK", "**OUTLIER** — diagnose plan"
+    n_bad = int(ratio > bar)
+    verdict = bad if n_bad else ok
+    if rows_ratio is not None and ratio > 2 and ratio > 2 * rows_ratio:
+        cause = GROWTH_CAUSES.get(name)
+        if cause:
+            verdict += f" — wall>2×rows: {cause}"
+        else:
+            verdict += " — **UNATTRIBUTED engine-side growth**"
+            n_bad += 1
+    return verdict, n_bad
 
+
+def render_table(
+    rows: dict[str, Measured], factor: int
+) -> tuple[list[str], int]:
+    """Markdown table lines for one factor, and its outlier count."""
     lines = [
+        f"| query | base s | {factor}× s | ratio | rows× | age | verdict |",
+        "|---|---|---|---|---|---|---|",
+    ]
+    n_bad = 0
+    for name, m in rows.items():
+        verdict, bad = grade(name, m.ratio, m.rows_ratio, factor)
+        n_bad += bad
+        if m.age:
+            verdict += " (carried)"
+        rr = "—" if m.rows_ratio is None else f"{m.rows_ratio:.2f}"
+        lines.append(
+            f"| {name} | {m.base_s:.2f} | {m.big_s:.2f} | {m.ratio:.2f} | "
+            f"{rr} | {m.age} | {verdict} |"
+        )
+    return lines, n_bad
+
+
+def section_title(factor: int) -> str | None:
+    return None if factor == MAIN_FACTOR else f"{factor}× tier"
+
+
+def section_body(
+    base: str, factor: int, reps: int, master: str,
+    table: list[str], n_bad: int,
+) -> list[str]:
+    run = (
+        f"`scripts/scaling_probe.py`, best-of-{reps} per point, "
+        f"`{master}`"
+    )
+    if factor != MAIN_FACTOR:
+        return [
+            f"Base `{base}` vs **{factor}×** inflation ({run}). Same "
+            f"recipe, grading and growth attribution as the "
+            f"{MAIN_FACTOR}× table at the top of this file; pass bar "
+            f"ratio ≤ {1.5 * factor:.0f}. Rows carry forward per "
+            "factor: this table never takes rows from another.",
+            "",
+            *table,
+            "",
+            f"Outliers: {n_bad}.",
+        ]
+    return [
         "# SCALING — empirical wall-ratio probe",
         "",
         f"Base `{base}` vs self-authored **{factor}×** inflation "
-        f"(`scripts/scaling_probe.py`, best-of-{reps} per point, "
-        "`local[32]`). Inflation = deterministic replication with "
+        f"({run}). Inflation = deterministic replication with "
         "perturbed ids/text/vectors (replicas are NOT near-dups of "
         "their originals — see the script docstring), so ratios "
         "measure ENGINE scaling, not output growth.",
@@ -478,159 +507,94 @@ def main() -> int:
         "counts as an outlier. '—' = measured before this column "
         "existed (re-measured on rotation).",
         "",
-        "| query | base s | {f}× s | ratio | rows× | age | verdict |".format(
-            f=factor
-        ),
-        "|---|---|---|---|---|---|---|",
-    ]
-    n_bad = 0
-
-    def grade(name: str, ratio: float) -> tuple[str, bool]:
-        if name in SF_INDEPENDENT:
-            return "sf-independent fixture (not graded)", False
-        if name in QUADRATIC_BY_DESIGN:
-            if ratio <= 1.5 * factor * factor:
-                return (
-                    "OK (pair-quadratic by design: sampled all-pairs "
-                    f"kernel demo, graded vs 1.5·{factor}²)"
-                ), False
-            return "**OUTLIER** — kernel itself degraded", True
-        if ratio <= 1.5 * factor:
-            return "OK", False
-        return "**OUTLIER** — diagnose plan", True
-
-    fresh_names = set()
-    for name, tb, tg, ratio, rows_ratio in rows:
-        fresh_names.add(name)
-        verdict, bad = grade(name, ratio)
-        # growth attribution: engine-side wall growth beyond output
-        # growth needs a name (fixed-overhead rows, wall ratio ≤ 2,
-        # are exempt — at probe scale they measure JVM floor, not
-        # engine scaling)
-        if (
-            ratio > 2
-            and ratio > 2 * rows_ratio
-            and name not in SF_INDEPENDENT
-        ):
-            cause = GROWTH_CAUSES.get(name)
-            if cause:
-                verdict += f" — wall>2×rows: {cause}"
-            else:
-                verdict += " — **UNATTRIBUTED engine-side growth**"
-                n_bad += 1
-        n_bad += bad
-        lines.append(
-            f"| {name} | {tb:.2f} | {tg:.2f} | {ratio:.2f} | "
-            f"{rows_ratio:.2f} | 0 | {verdict} |"
-        )
-    for name in sorted(prior_rows):
-        if name not in fresh_names:
-            tb, tg, ratio, rows_ratio, age = prior_rows[name]
-            verdict, bad = grade(name, ratio)
-            n_bad += bad
-            # carried rows keep their attribution requirement: the
-            # measured rows ratio travels with them
-            if (
-                rows_ratio is not None
-                and ratio > 2
-                and ratio > 2 * rows_ratio
-                and name not in SF_INDEPENDENT
-            ):
-                cause = GROWTH_CAUSES.get(name)
-                if cause:
-                    verdict += f" — wall>2×rows: {cause}"
-                else:
-                    verdict += " — **UNATTRIBUTED engine-side growth**"
-                    n_bad += 1
-            rr = f"{rows_ratio:.2f}" if rows_ratio is not None else "—"
-            lines.append(
-                f"| {name} | {tb:.2f} | {tg:.2f} | {ratio:.2f} | "
-                f"{rr} | {age + 1} | {verdict} (carried) |"
-            )
-    # ---- simhash_pairs diagnosis (round-6 ask #4) ----
-    sh_base = simhash_bucket_stats(spark, base)
-    sh_big = simhash_bucket_stats(spark, dst)
-    cand_ratio = sh_big["cand_pairs"] / max(1, sh_base["cand_pairs"])
-    out_ratio = sh_big["out_pairs"] / max(1, sh_base["out_pairs"])
-    bucket_ratio = sh_big["max_bucket"] / max(1, sh_base["max_bucket"])
-    degenerate = bucket_ratio > 3 * factor  # superlinear occupancy
-    lines += [
-        "",
-        "## simhash_pairs: bucket-occupancy diagnosis",
-        "",
-        "Its wall ratio tracks CANDIDATE-PAIR growth (the band join's "
-        "Σ n·(n−1)/2 over (band_idx, band_val) buckets), so the "
-        "question is whether that growth is pair-output-linear or a "
-        "degenerate bucket going quadratic:",
-        "",
-        "| scale | docs | buckets | max bucket | p99 bucket | "
-        "candidate pairs | output pairs |",
-        "|---|---|---|---|---|---|---|",
-        f"| 1× | {sh_base['n_docs']} | {sh_base['n_buckets']} | "
-        f"{sh_base['max_bucket']} | {sh_base['p99_bucket']} | "
-        f"{sh_base['cand_pairs']} | {sh_base['out_pairs']} |",
-        f"| {factor}× | {sh_big['n_docs']} | {sh_big['n_buckets']} | "
-        f"{sh_big['max_bucket']} | {sh_big['p99_bucket']} | "
-        f"{sh_big['cand_pairs']} | {sh_big['out_pairs']} |",
-        "",
-        f"Candidate pairs grew {cand_ratio:.1f}×, output pairs "
-        f"{out_ratio:.1f}×, max bucket {bucket_ratio:.1f}×. "
-        + (
-            "**Max-bucket occupancy is growing superlinearly — a "
-            "degenerate 12-bit band value; apply the Manku block-split "
-            "refinement or widen bands.**"
-            if degenerate
-            else "Bucket occupancy grows ~linearly with replication "
-            "(the 12-bit band values stay spread); the wall-ratio is "
-            "candidate/output-pair growth, i.e. the workload itself — "
-            "not bucket degeneracy. No block-split refinement needed; "
-            "at production scale the planted-hot-key probe "
-            "(`scripts/skew_probe.py`) covers the degenerate-key "
-            "incident this diagnosis rules out here."
-        ),
-        "",
-        "## Planted-hot-key skew probe",
-        "",
-        "`scripts/skew_probe.py` (committed `SKEW_PROBE.json`, "
-        "asserted by `tests/test_skew_probe.py`) manufactures the "
-        "degenerate-band-key incident directly: one boilerplate text "
-        "on 30% of 20k docs, probed through the lsh band join. "
-        "Per-task shuffle-read records, max/median: naive join ~8.3× "
-        "(the incident), AQE skew split ~2.6× over ≥5 tasks, "
-        "replicated-salt join ~1.7×, broadcast 1.0 (no shuffle); "
-        "groupBy(band_key).count() stays ~1.3× even naive — map-side "
-        "partial aggregation already bounds decomposable aggs, and "
-        "`skew.salted_aggregate` is result-identical where planned "
-        "salting is still wanted.",
+        *table,
         "",
         f"Outliers: {n_bad}.",
         "",
-        "Probe fixture lives under `.scale/` (git-ignored); rebuild by "
-        "deleting it. Timings are machine-dependent — compare ratios, "
-        "not absolute seconds.",
+        "Probe fixtures live under `.scale/<base>-x<factor>` "
+        "(git-ignored) and are reused only when completely written; "
+        "rebuild by deleting them. Timings are machine-dependent — "
+        "compare ratios, not absolute seconds.",
     ]
-    # hand-written / appended sections (round notes, deep_probe 30x
-    # appendix) survive the regeneration verbatim
-    extra = carried_sections(
-        "/root/repo/SCALING.md",
-        regenerated={
-            "simhash_pairs: bucket-occupancy diagnosis",
-            "Planted-hot-key skew probe",
-        },
+
+
+def measure(spark, name: str, base: str, big: str, reps: int) -> Measured:
+    fn = declared.REGISTRY[name].fn
+    t, n = {}, {}
+    for d in (base, big):
+        t[d] = min(time_query(spark, fn, d, reps))
+        # OUTPUT rows at each size, so wall growth separates into
+        # engine work vs result growth (one extra execution per size)
+        n[d] = fn(spark, d).count()
+    ratio = t[big] / t[base] if t[base] > 0 else float("inf")
+    rows_ratio = n[big] / max(1, n[base])
+    print(
+        f"{name}: {t[base]:.2f}s -> {t[big]:.2f}s  ratio {ratio:.2f}  "
+        f"rows {n[base]} -> {n[big]} ({rows_ratio:.2f}x)"
     )
-    if extra:
-        lines += [""] + extra
-    # the loud coverage gate: every registry query
-    # must have a row — fresh or carried — in the file we just wrote
-    covered = fresh_names | set(prior_rows)
-    uncovered = sorted(k for k in declared.REGISTRY if k not in covered)
-    with open("/root/repo/SCALING.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    if uncovered:
+    return Measured(t[base], t[big], ratio, rows_ratio, 0)
+
+
+def main(argv: list[str] | None = None) -> int:
+    p = argparse.ArgumentParser(
+        description="Time registry queries on a base fixture and on its "
+        "inflation; rewrite that factor's table in SCALING.md."
+    )
+    p.add_argument("--base", required=True, help="base sf directory")
+    p.add_argument(
+        "--factor", type=int, required=True,
+        help="inflation factor; each factor has its own table",
+    )
+    p.add_argument(
+        "--reps", type=int, default=2,
+        help="timed runs per point, best one reported (default 2)",
+    )
+    p.add_argument(
+        "--queries", nargs="+", default=[], metavar="Q",
+        help="measure exactly these registry queries and carry the "
+        "other rows (default: the coverage run)",
+    )
+    args = p.parse_args(argv)
+    unknown = [q for q in args.queries if q not in declared.REGISTRY]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+
+    title = section_title(args.factor)
+    lines: list[str] = []
+    if os.path.exists(SCALING_MD):
+        with open(SCALING_MD) as f:
+            lines = f.read().splitlines()
+    prior = parse_rows(dict(split_sections(lines)).get(title, []))
+    by_cost: list[str] = []
+    if not args.queries:
+        with open(BENCH_LOCAL) as f:
+            bench = json.load(f)["queries"]
+        by_cost = sorted(bench, key=lambda k: -bench[k])
+    chosen = select(prior, by_cost, args.queries)
+
+    spark = get_spark("scaling-probe")
+    big = fixture_dir(args.base, args.factor)
+    inflate(spark, args.base, big, args.factor)
+    # warm once per size so footer/JVM costs don't land on query 1
+    materialize(declared.q_search_flagship(spark, args.base))
+    materialize(declared.q_search_flagship(spark, big))
+
+    fresh = {q: measure(spark, q, args.base, big, args.reps) for q in chosen}
+    rows = merge(fresh, prior)
+    table, n_bad = render_table(rows, args.factor)
+    write_section(
+        SCALING_MD,
+        title,
+        section_body(
+            args.base, args.factor, args.reps, spark.sparkContext.master,
+            table, n_bad,
+        ),
+    )
+    print(f"wrote SCALING.md {args.factor}× table ({n_bad} outliers)")
+    uncovered = sorted(k for k in declared.REGISTRY if k not in rows)
+    if uncovered and not args.queries:
         print(f"COVERAGE GAP — registry queries with no row: {uncovered}")
-        print(f"wrote SCALING.md ({n_bad} outliers, {len(uncovered)} uncovered)")
         return 2
-    print(f"wrote SCALING.md ({n_bad} outliers, full registry coverage)")
     return 1 if n_bad else 0
 
 

@@ -84,27 +84,3 @@ def test_legacy_records_without_evidence_fields_still_work():
     r = compare({"q": 2.0}, {"q": 8.0}, old_rec={"queries": {"q": 2.0}})
     assert "q" in r["flagged"] and r["auto_adjudicated"] == {}
 
-
-def test_scale100_replace_section_preserves_other_content(tmp_path):
-    """scale100_probe.replace_section must leave every other line of
-    SCALING.md untouched and idempotently replace its own section."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "scale100_probe", "scripts/scale100_probe.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    p = tmp_path / "SCALING.md"
-    p.write_text(
-        "# SCALING\n\nintro\n\n## other section\n\nkeep me\n"
-    )
-    mod.replace_section(str(p), "100x tier", ["| a | 1 |"])
-    text = p.read_text()
-    assert "keep me" in text and "## 100x tier" in text
-    mod.replace_section(str(p), "100x tier", ["| b | 2 |"])
-    text = p.read_text()
-    assert "| b | 2 |" in text and "| a | 1 |" not in text
-    assert text.count("## 100x tier") == 1
-    assert "keep me" in text

@@ -185,23 +185,36 @@ def test_real_models_through_spark_pandas_udf_harness(spark):
 
 def test_real_model_smoke_report_matches_environment():
     """Round-6 VERDICT ask #6: the real-weights gap must be EVIDENCED.
-    Runs scripts/real_model_smoke.py (cheap when blocked: it only
-    probes imports + one DNS lookup) and pins the contract: either the
-    environment truly blocks the real branch at a recorded stage, or —
-    on a capable box — the tiny-weight CPU inference actually ran."""
+    Runs scripts/real_model_smoke.probe() in a child process (cheap
+    when blocked: it only probes imports + one DNS lookup) and pins the
+    contract: either the environment truly blocks the real branch at a
+    recorded stage, or — on a capable box — the tiny-weight CPU
+    inference actually ran. The committed REAL_MODEL_SMOKE.json is
+    never rewritten by the test."""
     import json
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    committed = os.path.join(repo, "REAL_MODEL_SMOKE.json")
+    with open(committed, "rb") as f:
+        before = f.read()
     out = subprocess.run(
-        [sys.executable, os.path.join(repo, "scripts", "real_model_smoke.py")],
+        [
+            sys.executable,
+            "-c",
+            "import json, sys; sys.path.insert(0, sys.argv[1]); "
+            "import real_model_smoke as m; print(json.dumps(m.probe()))",
+            os.path.join(repo, "scripts"),
+        ],
         capture_output=True,
         text=True,
         timeout=600,
         cwd=repo,
     )
     assert out.returncode == 0, out.stderr[-1000:]
+    with open(committed, "rb") as f:
+        assert f.read() == before
     report = json.loads(out.stdout.strip().splitlines()[-1])
     assert set(report["steps"]) == {
         "import_transformers",
