@@ -7,9 +7,10 @@ row-group locality. Compaction rewrites the data into ~target-size
 files. The commit uses an immutable-snapshot + atomic pointer pattern
 (Delta/Iceberg's manifest idea): readers mid-compaction keep a
 consistent view, and a failed compaction leaves the live snapshot
-untouched. (``streaming.pipeline.ParquetScdSink`` instead bounds
-per-batch I/O with bucket-partitioned dynamic overwrite — the two
-commit disciplines trade atomicity scope against rewrite volume.)
+untouched. ``streaming.pipeline.ParquetScdSink`` uses the same
+discipline per micro-batch: it writes only the touched buckets to a new
+immutable epoch directory and commits them by renaming a bucket→epoch
+manifest.
 
 File inventory goes through the Hadoop FileSystem API (not ``os``), so
 the same code paths work against HDFS / S3A / local on a real cluster.
@@ -17,7 +18,6 @@ the same code paths work against HDFS / S3A / local on a real cluster.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 from dataclasses import dataclass
@@ -223,120 +223,59 @@ def compact_scd_store(
 ) -> PartitionCompactionStats:
     """Compact a ``streaming.pipeline.ParquetScdSink`` store: its
     manifest protocol already IS a snapshot commit, so compaction is
-    just one more transaction — read the live buckets (manifest-pruned,
-    exactly like any reader), rewrite them into a SINGLE new epoch
-    directory with ``files_per_bucket`` files per bucket, commit a
-    manifest pointing every bucket at it, then GC. A crash before the
-    manifest rename leaves the old state fully live (the sink's own
-    atomicity argument, verbatim); a crash during GC leaves
-    unreferenced garbage only. Readers keep static (epoch, bucket)
-    partition pruning; the stream keeps appending epochs after
-    compaction with no special casing — commit ids are shared, so the
-    next micro-batch just becomes the next epoch.
+    just one more transaction — read the live buckets (the exact
+    directories the manifest names, like any reader), rewrite them into
+    a SINGLE new epoch directory with ``files_per_bucket`` files per
+    bucket, commit a manifest pointing every bucket at it, then GC. A
+    crash before the manifest rename leaves the old state fully live
+    (the sink's own atomicity argument, verbatim); a crash during GC
+    leaves unreferenced garbage only. The stream keeps appending epochs
+    after compaction with no special casing — commit ids are shared, so
+    the next micro-batch just becomes the next epoch.
 
-    GC honours the store's history mode (a delete-everything GC
-    would break the manifest invariant — superseded
-    manifests stayed readable while the epoch dirs they referenced
-    were deleted, and ``read_scd_store_asof`` would die with a raw
-    parquet path error):
+    GC (``streaming.pipeline.scd_gc``) honours the store's history mode:
 
     - ``retain_history=False`` (default sink): every superseded
-      MANIFEST is deleted along with every superseded epoch directory,
-      so no readable pointer can reference deleted data — time travel
-      on a non-retain store fails with the typed FileNotFoundError,
-      never a dangling read.
+      manifest is deleted along with the data only it referenced, so
+      no readable pointer can reference deleted data — time travel on
+      a non-retain store fails with the typed FileNotFoundError, never
+      a dangling read.
     - ``retain_history=True`` (time-travel store): all manifests are
       kept and only (epoch, bucket) directories referenced by NO
       manifest are deleted — every committed ``VERSION AS OF`` stays
-      exactly readable across the compaction boundary. Compaction then
-      speeds up the LIVE read path (one epoch, few files); history
-      storage is reclaimed separately and explicitly by
-      ``streaming.pipeline.scd_vacuum_history``.
+      exactly readable across the compaction boundary. History storage
+      is reclaimed separately by ``streaming.pipeline.scd_vacuum_history``.
 
     Concurrency (same contract as ``compact_lsh_index``): compaction
     assumes NO concurrent ingest — the manifest protocol is
     single-writer, and a micro-batch committing between this
     function's manifest read and its own commit would collide on the
-    same commit id. As defense-in-depth for the GC half specifically,
-    epoch directories NEWER than the compaction's own commit id are
-    never deleted (an in-flight batch that has written its epoch data
-    but not yet committed its manifest looks exactly like a crash
-    orphan — it is left for the writer to commit or overwrite), but
-    the manifest race itself is not resolved: run compaction in a
-    maintenance window.
+    same commit id. The GC never deletes an epoch directory newer than
+    the compaction's own commit (an in-flight write looks exactly like a
+    crash orphan), but the manifest race itself is not resolved: run
+    compaction in a maintenance window.
     """
-    from beis_orp_data_service_spark.sources import hadoop_fs as hfs
-    from beis_orp_data_service_spark.streaming.pipeline import ParquetScdSink
+    from beis_orp_data_service_spark.streaming import pipeline as st
     from pyspark.sql import functions as F
 
-    sink = ParquetScdSink(
-        spark, path, key_col="", order_col="", id_col="",
-        retain_history=retain_history,
-    )
-    prev_id, mapping = sink._current_manifest()
-    if not mapping:
-        raise FileNotFoundError(f"no committed SCD store at {path}")
-    files_before = len(list_data_files(spark, sink._data_root))
-    store = sink._store_df(mapping)
+    prev_id, mapping = st.scd_manifest(spark, path)
+    store = st.scd_read(spark, path, mapping)  # typed error when empty
+    data_root = st.scd_data_root(path)
+    files_before = len(list_data_files(spark, data_root))
     commit_id = prev_id + 1
     (
-        store.repartition(
-            max(1, len(mapping) * files_per_bucket), F.col(ParquetScdSink.BUCKET)
-        )
+        store.repartition(max(1, len(mapping) * files_per_bucket), F.col(st.BUCKET))
         .write.mode("overwrite")
-        .partitionBy(ParquetScdSink.BUCKET)
-        .parquet(f"{sink._data_root}/epoch={commit_id}")
+        .partitionBy(st.BUCKET)
+        .parquet(st.scd_epoch_dir(path, commit_id))
     )
-    sink._commit_manifest(commit_id, {b: commit_id for b in mapping})
-    mdir = f"{path.rstrip('/')}/_manifest"
-    if not retain_history:
-        # drop superseded manifests FIRST (pointer disappears before its
-        # data — the vacuum ordering), then superseded epoch dirs
-        for name in hfs.list_names(spark, mdir):
-            if (
-                name.startswith("manifest-")
-                and name.endswith(".json")
-                and name != f"manifest-{commit_id:020d}.json"
-            ):
-                hfs.delete(spark, f"{mdir}/{name}")
-        for name in hfs.list_names(spark, sink._data_root):
-            if (
-                name.startswith("epoch=")
-                and int(name.split("=", 1)[1]) < commit_id
-            ):
-                hfs.delete(spark, f"{sink._data_root}/{name}", recursive=True)
-    else:
-        # delete only (epoch, bucket) dirs no surviving manifest
-        # references — orphans from crashed writes; every committed
-        # snapshot stays reconstructible
-        referenced: set[tuple[int, int]] = set()
-        for name in hfs.list_names(spark, mdir):
-            if not (name.startswith("manifest-") and name.endswith(".json")):
-                continue
-            data = hfs.read_bytes(spark, f"{mdir}/{name}")
-            for b, e in json.loads(data.decode()).items():
-                referenced.add((int(e), int(b)))
-        for epoch_name in hfs.list_names(spark, sink._data_root):
-            if not epoch_name.startswith("epoch="):
-                continue
-            e = int(epoch_name.split("=", 1)[1])
-            if e > commit_id:
-                # possibly an in-flight concurrent write (data landed,
-                # manifest not yet committed) — never GC it
-                continue
-            for bname in hfs.list_names(spark, f"{sink._data_root}/{epoch_name}"):
-                if not bname.startswith(f"{ParquetScdSink.BUCKET}="):
-                    continue
-                b = int(bname.split("=", 1)[1])
-                if (e, b) not in referenced:
-                    hfs.delete(
-                        spark,
-                        f"{sink._data_root}/{epoch_name}/{bname}",
-                        recursive=True,
-                    )
+    st.scd_commit(
+        spark, path, commit_id, {b: commit_id for b in mapping}, retain_history
+    )
+    st.scd_gc(spark, path, keep_from=0 if retain_history else commit_id)
     return PartitionCompactionStats(
         partitions_seen=len(mapping),
         partitions_compacted=len(mapping),
         files_before=files_before,
-        files_after=len(list_data_files(spark, sink._data_root)),
+        files_after=len(list_data_files(spark, data_root)),
     )

@@ -97,15 +97,25 @@ def _version_of(name: str, prefix: str, suffix: str) -> int | None:
     return int(core) if core.isdigit() else None
 
 
-def latest_version(spark, dir_path: str, prefix: str, suffix: str) -> int:
-    """Highest committed version in ``dir_path`` (files named
-    ``<prefix><digits><suffix>``); -1 when none."""
-    versions = [
+def versioned_path(dir_path: str, prefix: str, suffix: str, version: int) -> str:
+    """The file committing ``version``: ``<prefix><020d-version><suffix>``."""
+    return f"{dir_path}/{prefix}{version:020d}{suffix}"
+
+
+def list_versions(spark, dir_path: str, prefix: str, suffix: str) -> list[int]:
+    """Committed versions in ``dir_path``, ascending (files named
+    ``<prefix><digits><suffix>``)."""
+    return sorted(
         v
         for n in list_names(spark, dir_path)
         if (v := _version_of(n, prefix, suffix)) is not None
-    ]
-    return max(versions, default=-1)
+    )
+
+
+def latest_version(spark, dir_path: str, prefix: str, suffix: str) -> int:
+    """Highest committed version in ``dir_path``; -1 when none."""
+    versions = list_versions(spark, dir_path, prefix, suffix)
+    return versions[-1] if versions else -1
 
 
 def write_new_versioned(
@@ -129,17 +139,11 @@ def write_new_versioned(
         # GC no-op, the opposite of "retain nothing old"
         raise ValueError(f"keep must be >= 1: {keep}")
     mkdirs(spark, dir_path)
-    name = f"{prefix}{version:020d}{suffix}"
-    write_bytes_rename(spark, f"{dir_path}/{name}", data)
+    write_bytes_rename(spark, versioned_path(dir_path, prefix, suffix, version), data)
     if keep is None:
         return
-    versions = sorted(
-        v
-        for n in list_names(spark, dir_path)
-        if (v := _version_of(n, prefix, suffix)) is not None
-    )
-    for old in versions[:-keep]:
-        delete(spark, f"{dir_path}/{prefix}{old:020d}{suffix}")
+    for old in list_versions(spark, dir_path, prefix, suffix)[:-keep]:
+        delete(spark, versioned_path(dir_path, prefix, suffix, old))
 
 
 def read_latest_versioned(
@@ -150,4 +154,4 @@ def read_latest_versioned(
     v = latest_version(spark, dir_path, prefix, suffix)
     if v < 0:
         return -1, None
-    return v, read_bytes(spark, f"{dir_path}/{prefix}{v:020d}{suffix}")
+    return v, read_bytes(spark, versioned_path(dir_path, prefix, suffix, v))

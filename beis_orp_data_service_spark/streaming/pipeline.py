@@ -67,27 +67,154 @@ def scd_merge_batch(
     return scd_versions(deduped, key_col=key_col, order_col=order_col, tiebreak_col=id_col)
 
 
+# ---------------------------------------------------------------------------
+# The SCD store's on-disk format. Everything that knows the layout lives
+# here; the sink, the readers, vacuum and compaction are written on top.
+#
+#     <root>/data/epoch=E/_bucket=B/part-*.parquet   (immutable)
+#     <root>/_manifest/manifest-<020d E>.json        ({bucket: epoch})
+# ---------------------------------------------------------------------------
+
+BUCKET = "_bucket"
+_MANIFEST = ("manifest-", ".json")
+
+
+def _manifest_dir(path: str) -> str:
+    return f"{path.rstrip('/')}/_manifest"
+
+
+def scd_data_root(path: str) -> str:
+    return f"{path.rstrip('/')}/data"
+
+
+def scd_epoch_dir(path: str, epoch: int) -> str:
+    return f"{scd_data_root(path)}/epoch={epoch}"
+
+
+def _bucket_dir(path: str, epoch: int, bucket: int) -> str:
+    return f"{scd_epoch_dir(path, epoch)}/{BUCKET}={bucket}"
+
+
+def _child_ids(spark: SparkSession, dir_path: str, name: str) -> list[int]:
+    """The ``N`` of every ``<name>=N`` child directory of ``dir_path``."""
+    return [
+        int(n.split("=", 1)[1])
+        for n in hfs.list_names(spark, dir_path)
+        if n.startswith(f"{name}=")
+    ]
+
+
+def scd_manifest(
+    spark: SparkSession, path: str, commit_id: int | None = None
+) -> tuple[int, dict[int, int]]:
+    """(commit id, bucket -> epoch map) of the latest commit, or of
+    ``commit_id``. An empty store reads as (-1, {}); a named commit that
+    was never written, or was GC'd, raises ``FileNotFoundError``."""
+    mdir = _manifest_dir(path)
+    if commit_id is None:
+        commit_id, data = hfs.read_latest_versioned(spark, mdir, *_MANIFEST)
+        if data is None:
+            return -1, {}
+    else:
+        f = hfs.versioned_path(mdir, *_MANIFEST, commit_id)
+        if not hfs.exists(spark, f):
+            raise FileNotFoundError(
+                f"no committed manifest {commit_id} under {path} "
+                "(not yet committed, or GC'd — write with retain_history=True)"
+            )
+        data = hfs.read_bytes(spark, f)
+    return commit_id, {int(b): int(e) for b, e in json.loads(data.decode()).items()}
+
+
+def scd_commit(
+    spark: SparkSession,
+    path: str,
+    commit_id: int,
+    mapping: dict[int, int],
+    retain_history: bool,
+) -> None:
+    """Commit ``mapping`` by renaming a fresh manifest into place. A
+    default store keeps the newest 10 manifests (one per micro-batch
+    would otherwise accumulate forever); a time-travel store keeps all."""
+    hfs.write_new_versioned(
+        spark,
+        _manifest_dir(path),
+        *_MANIFEST,
+        commit_id,
+        json.dumps({str(b): e for b, e in mapping.items()}).encode(),
+        keep=None if retain_history else 10,
+    )
+
+
+def scd_read(spark: SparkSession, path: str, mapping: dict[int, int]) -> DataFrame:
+    """The rows of exactly the ``(epoch, bucket)`` directories
+    ``mapping`` names, with the ``_bucket`` column. Nothing else under
+    ``data/`` is listed, so superseded or orphan epochs cost nothing."""
+    if not mapping:
+        # before the eager parquet read: a missing store must raise
+        # the documented typed error, not AnalysisException
+        raise FileNotFoundError(f"no committed SCD store at {path}")
+    paths = [_bucket_dir(path, e, b) for b, e in sorted(mapping.items())]
+    return (
+        spark.read.option("basePath", scd_data_root(path))
+        .parquet(*paths)
+        .drop("epoch")
+    )
+
+
+def scd_gc(spark: SparkSession, path: str, keep_from: int) -> dict[str, int]:
+    """Delete the manifests older than ``keep_from``, then every
+    ``(epoch, bucket)`` directory no surviving manifest references, and
+    an epoch directory once none of its buckets is referenced. Epochs
+    newer than the newest commit are never touched: they are an
+    in-flight write (data landed, manifest not yet committed) or a crash
+    orphan that the replayed batch overwrites. Manifests go first, so a
+    crash mid-GC leaves extra history, never a readable manifest with
+    missing buckets."""
+    mdir = _manifest_dir(path)
+    versions = hfs.list_versions(spark, mdir, *_MANIFEST)
+    if not versions or keep_from > versions[-1]:
+        raise ValueError(
+            f"keep_from={keep_from} would delete every manifest (have {versions})"
+        )
+    doomed = [v for v in versions if v < keep_from]
+    for v in doomed:
+        hfs.delete(spark, hfs.versioned_path(mdir, *_MANIFEST, v))
+    referenced = {
+        (e, b)
+        for v in versions[len(doomed) :]
+        for b, e in scd_manifest(spark, path, v)[1].items()
+    }
+    n_dirs = 0
+    for e in _child_ids(spark, scd_data_root(path), "epoch"):
+        if e > versions[-1]:
+            continue
+        buckets = _child_ids(spark, scd_epoch_dir(path, e), BUCKET)
+        dead = [b for b in buckets if (e, b) not in referenced]
+        n_dirs += len(dead)
+        if len(dead) == len(buckets):
+            hfs.delete(spark, scd_epoch_dir(path, e), recursive=True)
+        else:
+            for b in dead:
+                hfs.delete(spark, _bucket_dir(path, e, b), recursive=True)
+    return {"manifests_deleted": len(doomed), "bucket_dirs_deleted": n_dirs}
+
+
 class ParquetScdSink:
     """foreachBatch sink maintaining an SCD-2 store as a key-bucketed
     parquet table with IMMUTABLE commit directories and an atomically
     renamed manifest — bounded per-batch I/O *and* crash atomicity.
 
-    Layout::
-
-        <root>/data/epoch=E/_bucket=NN/part-*.parquet   (immutable)
-        <root>/_manifest/manifest-<E>.json              (pointer file)
-
     The manifest maps every bucket to the commit epoch holding its
     CURRENT contents; the highest-numbered manifest file is the store
-    state. Each micro-batch (= transaction, the reference commits per
-    SQS message batch, tdb_query_helpers.py:158-183):
+    state (layout above). Each micro-batch (= transaction, the
+    reference commits per SQS message batch, tdb_query_helpers.py:158-183):
 
     1. stamps the batch rows with their bucket
        (``pmod(hash(key), n_buckets)``),
-    2. distributed-reads the current store restricted to the batch's
-       buckets — the manifest names the (epoch, bucket) partition pairs,
-       a broadcast left-semi join on the bucket column prunes every
-       untouched bucket from the scan,
+    2. reads the current store from exactly the ``epoch=E/_bucket=B``
+       directories the manifest names, and a broadcast left-semi join
+       on the bucket column drops every bucket the batch does not touch,
     3. merges (idempotent ``scd_merge_batch`` — SCD-2 versions are
        per-key, and a key lives entirely inside one bucket, so the
        merge never needs the other buckets),
@@ -97,8 +224,10 @@ class ParquetScdSink:
        buckets repointed at E) into place — rename is the atomic
        primitive on HDFS/local (and an atomic object PUT on S3A),
     6. best-effort GC: superseded bucket directories (unreferenced by
-       the new manifest) are deleted AFTER the commit; a crash mid-GC
-       leaves only unreferenced garbage, never corrupts state.
+       the new manifest) are deleted AFTER the commit, and so is an
+       epoch directory once the manifest references none of its
+       buckets; a crash mid-GC leaves only unreferenced garbage, never
+       corrupts state.
 
     Crash at ANY point before the manifest rename leaves the previous
     manifest — and therefore the previous store state — fully intact;
@@ -106,8 +235,9 @@ class ParquetScdSink:
     directory and commits then. (A dynamic-partition-overwrite sink
     lacks this atomicity — dynamic overwrite deletes old bucket files
     during job commit, so a crash in that window loses them.)
-    Per-batch I/O stays O(touched buckets +
-    batch): untouched buckets are neither read, rewritten, nor GC'd.
+    Untouched buckets are neither rewritten nor GC'd, and ``data/``
+    holds at most one epoch directory per live bucket, so the store
+    listing is bounded by ``n_buckets``, not by the number of batches.
 
     All store metadata I/O goes through the Hadoop FileSystem API (no
     ``os.listdir``/local-FS assumptions), so the store works on
@@ -121,7 +251,7 @@ class ParquetScdSink:
     protocol.
     """
 
-    BUCKET = "_bucket"
+    BUCKET = BUCKET
 
     def __init__(
         self,
@@ -146,115 +276,50 @@ class ParquetScdSink:
         # history until compact_scd_store GCs it)
         self.retain_history = retain_history
 
-    # --- store metadata (Hadoop FS via sources.hadoop_fs: HDFS/S3A/local) --
-
-    @property
-    def _data_root(self) -> str:
-        return f"{self.path}/data"
-
-    @property
-    def _manifest_dir(self) -> str:
-        return f"{self.path}/_manifest"
-
-    def _current_manifest(self) -> tuple[int, dict[int, int]]:
-        """(current commit id, bucket -> epoch map); (-1, {}) if empty."""
-        commit_id, data = hfs.read_latest_versioned(
-            self.spark, self._manifest_dir, "manifest-", ".json"
-        )
-        if data is None:
-            return -1, {}
-        mapping = {int(k): int(v) for k, v in json.loads(data.decode()).items()}
-        return commit_id, mapping
-
-    def _commit_manifest(self, commit_id: int, mapping: dict[int, int]) -> None:
-        # rename-to-fresh-versioned-name commit + best-effort GC of
-        # manifests older than the newest 10 (one manifest per
-        # micro-batch would otherwise accumulate forever and the
-        # per-batch directory listing stops being O(1))
-        hfs.write_new_versioned(
-            self.spark,
-            self._manifest_dir,
-            "manifest-",
-            ".json",
-            commit_id,
-            json.dumps({str(k): v for k, v in mapping.items()}).encode(),
-            keep=None if self.retain_history else 10,
-        )
-
-    def _store_df(self, mapping: dict[int, int]) -> DataFrame:
-        """Current store state: epoch+bucket partition-discovered read,
-        filtered to exactly the manifest's (epoch, bucket) pairs (static
-        partition pruning drops everything else, including orphan
-        uncommitted epochs)."""
-        if not mapping:
-            # before the eager parquet read: a missing store must raise
-            # the documented typed error, not AnalysisException
-            raise FileNotFoundError(f"no committed SCD store at {self.path}")
-        df = self.spark.read.option("basePath", self._data_root).parquet(
-            self._data_root
-        )
-        by_epoch: dict[int, list[int]] = {}
-        for b, e in mapping.items():
-            by_epoch.setdefault(e, []).append(b)
-        cond = None
-        for e, buckets in by_epoch.items():
-            c = (F.col("epoch") == e) & F.col(self.BUCKET).isin(buckets)
-            cond = c if cond is None else (cond | c)
-        return df.filter(cond).drop("epoch")
-
-    # --- the transaction ------------------------------------------------
-
     def _bucket_col(self, col):
         return F.pmod(F.hash(col), F.lit(self.n_buckets)).cast("int")
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.withColumn(self.BUCKET, self._bucket_col(F.col(self.key_col)))
-        prev_id, mapping = self._current_manifest()
+        spark, path = self.spark, self.path
+        batch = batch.withColumn(BUCKET, self._bucket_col(F.col(self.key_col)))
+        prev_id, mapping = scd_manifest(spark, path)
         commit_id = prev_id + 1  # single writer: foreachBatch serializes
         store = None
         if mapping:
-            touched = batch.select(self.BUCKET).distinct()
-            store = self._store_df(mapping).join(
-                F.broadcast(touched), self.BUCKET, "left_semi"
+            touched = batch.select(BUCKET).distinct()
+            store = scd_read(spark, path, mapping).join(
+                F.broadcast(touched), BUCKET, "left_semi"
             )
         out = scd_merge_batch(store, batch, self.key_col, self.order_col, self.id_col)
-        epoch_path = f"{self._data_root}/epoch={commit_id}"
-        (
-            out.write.mode("overwrite")  # retry of an uncommitted epoch
-            .partitionBy(self.BUCKET)
-            .parquet(epoch_path)
-        )
+        epoch_dir = scd_epoch_dir(path, commit_id)
+        # overwrite: the retry of an uncommitted epoch
+        out.write.mode("overwrite").partitionBy(BUCKET).parquet(epoch_dir)
         # touched buckets from filesystem METADATA (no data collect)
-        touched_ids = [
-            int(n.split("=", 1)[1])
-            for n in hfs.list_names(self.spark, f"{self._data_root}/epoch={commit_id}")
-            if n.startswith(f"{self.BUCKET}=")
-        ]
-        superseded = [
-            (b, mapping[b]) for b in touched_ids if b in mapping
-        ]
-        for b in touched_ids:
-            mapping[b] = commit_id
-        self._commit_manifest(commit_id, mapping)
-        # best-effort GC after the commit point: superseded bucket dirs
-        # are unreferenced now; a crash here leaves garbage, not damage.
-        # A time-travel store keeps them — older manifests still
-        # reference them for VERSION AS OF reads.
-        if not self.retain_history:
-            for b, old_epoch in superseded:
-                hfs.delete(
-                    self.spark,
-                    f"{self._data_root}/epoch={old_epoch}/{self.BUCKET}={b}",
-                    recursive=True,
-                )
+        touched_ids = _child_ids(spark, epoch_dir, BUCKET)
+        superseded = {b: mapping[b] for b in touched_ids if b in mapping}
+        mapping.update((b, commit_id) for b in touched_ids)
+        scd_commit(spark, path, commit_id, mapping, self.retain_history)
+        # best-effort GC after the commit point, targeted: the mapping
+        # already names every superseded pair, so nothing is listed. A
+        # crash here leaves garbage, not damage. A time-travel store
+        # keeps everything — older manifests still reference it.
+        if self.retain_history:
+            return
+        live = set(mapping.values())
+        for b, e in superseded.items():
+            if e in live:
+                hfs.delete(spark, _bucket_dir(path, e, b), recursive=True)
+        # the previous commit's epoch is dead here only if that batch
+        # touched no bucket (an empty batch still writes its directory)
+        for e in set(superseded.values()) | {prev_id}:
+            if e >= 0 and e not in live:
+                hfs.delete(spark, scd_epoch_dir(path, e), recursive=True)
 
 
 def read_scd_store(spark: SparkSession, path: str) -> DataFrame:
     """Read the live state of a :class:`ParquetScdSink` store (the
     latest committed manifest's buckets)."""
-    sink = ParquetScdSink(spark, path, key_col="", order_col="", id_col="")
-    _, mapping = sink._current_manifest()
-    return sink._store_df(mapping).drop(ParquetScdSink.BUCKET)
+    return scd_read(spark, path, scd_manifest(spark, path)[1]).drop(BUCKET)
 
 
 def read_scd_store_asof(
@@ -266,30 +331,13 @@ def read_scd_store_asof(
     named manifest AND every bucket directory it references must still
     exist (the default store GCs both). Raises ``FileNotFoundError``
     for an unknown or GC'd commit."""
-    import json as _json
-
-    manifest = f"{path.rstrip('/')}/_manifest/manifest-{commit_id:020d}.json"
-    if not hfs.exists(spark, manifest):
-        raise FileNotFoundError(
-            f"no committed manifest {commit_id} under {path} "
-            "(not yet committed, or GC'd — write with retain_history=True)"
-        )
-    mapping = {
-        int(k): int(v)
-        for k, v in _json.loads(hfs.read_bytes(spark, manifest).decode()).items()
-    }
-    sink = ParquetScdSink(spark, path, key_col="", order_col="", id_col="")
+    _, mapping = scd_manifest(spark, path, commit_id)
     # verify every referenced (epoch, bucket) directory still exists
     # BEFORE building the DataFrame: a manifest that outlived its data
     # (e.g. GC'd by a non-retain compaction) must fail with the typed
     # error, not a confusing parquet path-not-found mid-scan
-    missing = [
-        f"epoch={e}/{ParquetScdSink.BUCKET}={b}"
-        for b, e in sorted(mapping.items())
-        if not hfs.exists(
-            spark, f"{sink._data_root}/epoch={e}/{ParquetScdSink.BUCKET}={b}"
-        )
-    ]
+    dirs = [_bucket_dir(path, e, b) for b, e in sorted(mapping.items())]
+    missing = [d for d in dirs if not hfs.exists(spark, d)]
     if missing:
         raise FileNotFoundError(
             f"commit {commit_id} of {path} references GC'd data "
@@ -298,7 +346,7 @@ def read_scd_store_asof(
             "history-preserving maintenance (compact_scd_store("
             "retain_history=True) / scd_vacuum_history keep_from <= this commit)"
         )
-    return sink._store_df(mapping).drop(ParquetScdSink.BUCKET)
+    return scd_read(spark, path, mapping).drop(BUCKET)
 
 
 def run_scd_upsert_stream(
@@ -440,58 +488,6 @@ def stream_dedup_first_seen(
         stateStructType="seen boolean, deadline long",
         outputMode="append",
         timeoutConf=timeout,
-    )
-
-
-def stream_dedup_first_seen_tws(events: DataFrame) -> DataFrame:
-    """Spark-4-native variant of :func:`stream_dedup_first_seen` on the
-    ``transformWithStateInPandas`` StatefulProcessor API — the successor
-    to ``applyInPandasWithState`` (typed state handles, timers, state
-    TTL). Same semantics: first arrival of an id is emitted, every
-    redelivery swallowed.
-
-    Gated on ``google.protobuf`` (the API's worker-side dependency,
-    absent in this container — raises ImportError here; the
-    applyInPandasWithState form above is the tested default). Requires
-    the RocksDB state store provider, which the caller must set::
-
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
-    """
-    import google.protobuf  # noqa: F401 - fail fast with a clear error
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class FirstSeen(StatefulProcessor):  # pragma: no cover - needs protobuf
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.seen = handle.getValueState("seen", "seen boolean")
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self.seen.exists():
-                for _ in rows:  # drain redeliveries
-                    pass
-                return iter([])
-            first = None
-            for pdf in rows:
-                if first is None and len(pdf):
-                    first = pdf.iloc[[0]]
-            if first is None:  # all-empty chunks: don't burn the key
-                return iter([])
-            self.seen.update((True,))
-            return iter([first])
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(F.col("event_id")).transformWithStateInPandas(
-        statefulProcessor=FirstSeen(),
-        outputStructType=EVENTS_STREAM_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
     )
 
 
@@ -720,7 +716,6 @@ def lsh_dedup_batch(
     on the re-run (same-id exclusion alone misses that pair).
     """
     from beis_orp_data_service_spark.operators import dedup as dd
-    from beis_orp_data_service_spark.sources import hadoop_fs as hfs
 
     docs = batch.select(id_col, text_col)
     # sign the batch ONCE; the same band rows feed the probe join and
@@ -853,7 +848,9 @@ def ingest_batch(
         id_col="media_id",
         epoch=epoch,
     )
-    flags = spark.read.parquet(flagged_out).where(F.col("_epoch") == epoch)
+    # this epoch's partition only: the root would partition-discover
+    # every epoch ever written
+    flags = spark.read.parquet(f"{flagged_out}/_epoch={epoch}")
     admitted = (
         enriched.where(F.col("parse_error").isNull())
         .join(flags.where(~F.col("is_near_dup")).select("media_id"), "media_id")
@@ -949,7 +946,7 @@ def scd_store_changes(
 
     Requires ``retain_history=True`` commits (both manifests must be
     readable). One full-outer join keyed on id; each side is a
-    manifest-pruned store read. Output: (change_type, id, version,
+    manifest-exact store read. Output: (change_type, id, version,
     status) with pre/post image rows for updates."""
     old = read_scd_store_asof(spark, path, from_commit)
     new = read_scd_store_asof(spark, path, to_commit)
@@ -964,38 +961,27 @@ def scd_store_changes(
         F.col("status").alias("_sn"),
     )
     j = o.join(n, "id", "full_outer")
-    inserts = j.where(F.col("_vo").isNull()).select(
-        F.lit("insert").alias("change_type"),
-        "id",
-        F.col("_vn").alias("version"),
-        F.col("_sn").alias("status"),
-    )
-    deletes = j.where(F.col("_vn").isNull()).select(
-        F.lit("delete").alias("change_type"),
-        "id",
-        F.col("_vo").alias("version"),
-        F.col("_so").alias("status"),
-    )
-    changed = j.where(
-        F.col("_vo").isNotNull()
-        & F.col("_vn").isNotNull()
-        & (
-            (F.col("_vo") != F.col("_vn")) | (F.col("_so") != F.col("_sn"))
+
+    def change(kind: str, side: str):
+        return F.struct(
+            F.lit(kind).alias("change_type"),
+            F.col(f"_v{side}").alias("version"),
+            F.col(f"_s{side}").alias("status"),
+        )
+
+    # one pass over the join: each joined row classifies into 0, 1
+    # (insert / delete) or 2 (update pre + post image) change rows
+    changes = (
+        F.when(F.col("_vo").isNull(), F.array(change("insert", "n")))
+        .when(F.col("_vn").isNull(), F.array(change("delete", "o")))
+        .when(
+            (F.col("_vo") != F.col("_vn")) | (F.col("_so") != F.col("_sn")),
+            F.array(change("update_pre", "o"), change("update_post", "n")),
         )
     )
-    pre = changed.select(
-        F.lit("update_pre").alias("change_type"),
-        "id",
-        F.col("_vo").alias("version"),
-        F.col("_so").alias("status"),
+    return j.select("id", F.explode(changes).alias("c")).select(
+        "c.change_type", "id", "c.version", "c.status"
     )
-    post = changed.select(
-        F.lit("update_post").alias("change_type"),
-        "id",
-        F.col("_vn").alias("version"),
-        F.col("_sn").alias("status"),
-    )
-    return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
 
 
 def scd_vacuum_history(
@@ -1005,43 +991,7 @@ def scd_vacuum_history(
     ``keep_from`` and every bucket directory referenced by NO surviving
     manifest — commits ≥ keep_from stay exactly readable, older
     VERSION AS OF reads stop resolving (the Delta ``VACUUM`` contract).
-    Deletion order is safe-by-construction: manifests first (the
-    pointer disappears before its data), then unreferenced data — a
-    crash mid-vacuum leaves extra retained history, never a readable
-    manifest with missing buckets. Returns counts for observability
-    (no-silent-caps: the caller sees what was reclaimed)."""
-    import json as _json
-
-    mdir = f"{path.rstrip('/')}/_manifest"
-    droot = f"{path.rstrip('/')}/data"
-    versions = sorted(
-        int(n[len("manifest-") : -len(".json")])
-        for n in hfs.list_names(spark, mdir)
-        if n.startswith("manifest-") and n.endswith(".json")
-    )
-    if not versions or keep_from > versions[-1]:
-        raise ValueError(
-            f"keep_from={keep_from} would delete every manifest (have {versions})"
-        )
-    doomed = [v for v in versions if v < keep_from]
-    survivors = [v for v in versions if v >= keep_from]
-    for v in doomed:
-        hfs.delete(spark, f"{mdir}/manifest-{v:020d}.json")
-    referenced: set[tuple[int, int]] = set()
-    for v in survivors:
-        data = hfs.read_bytes(spark, f"{mdir}/manifest-{v:020d}.json")
-        for b, e in _json.loads(data.decode()).items():
-            referenced.add((int(e), int(b)))
-    n_dirs = 0
-    for epoch_name in hfs.list_names(spark, droot):
-        if not epoch_name.startswith("epoch="):
-            continue
-        e = int(epoch_name.split("=", 1)[1])
-        for bname in hfs.list_names(spark, f"{droot}/{epoch_name}"):
-            if not bname.startswith(f"{ParquetScdSink.BUCKET}="):
-                continue
-            b = int(bname.split("=", 1)[1])
-            if (e, b) not in referenced:
-                hfs.delete(spark, f"{droot}/{epoch_name}/{bname}", recursive=True)
-                n_dirs += 1
-    return {"manifests_deleted": len(doomed), "bucket_dirs_deleted": n_dirs}
+    Safe ordering and the in-flight-epoch guard are :func:`scd_gc`'s.
+    Returns counts for observability (no-silent-caps: the caller sees
+    what was reclaimed)."""
+    return scd_gc(spark, path, keep_from)

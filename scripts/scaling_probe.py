@@ -520,6 +520,10 @@ def section_body(
 
 def measure(spark, name: str, base: str, big: str, reps: int) -> Measured:
     fn = declared.REGISTRY[name].fn
+    # one untimed run before either size is timed: otherwise the base
+    # point absorbs the query's first-run costs (code generation, Python
+    # workers, fixture builds) and, at --reps 1, the ratio reads low
+    materialize(fn(spark, base))
     t, n = {}, {}
     for d in (base, big):
         t[d] = min(time_query(spark, fn, d, reps))

@@ -53,31 +53,6 @@ def test_list_names_missing_dir(spark, tmp_path):
     assert hfs.list_names(spark, str(tmp_path / "nope")) == []
 
 
-def test_scd_manifest_count_bounded_across_many_batches(spark, tmp_path):
-    """One manifest per micro-batch must NOT accumulate forever — after
-    15 single-row batches only the newest 10 manifests remain and the
-    store still reads correctly."""
-    from pyspark.sql import functions as F
-
-    from beis_orp_data_service_spark.streaming import pipeline as st
-
-    store = str(tmp_path / "scd")
-    sink = st.ParquetScdSink(spark, store, "user_id", "ts", "event_id")
-    for i in range(15):
-        batch = spark.createDataFrame(
-            [(1000 + i, "2024-01-01T00:00:00", i % 3, "click", 1.0, "{}")],
-            "event_id long, ts string, user_id long, event_type string, value double, props string",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        sink(batch, epoch_id=i)
-    manifests = [
-        n for n in os.listdir(os.path.join(store, "_manifest"))
-        if n.startswith("manifest-")
-    ]
-    assert len(manifests) == 10
-    out = st.read_scd_store(spark, store).toPandas()
-    assert len(out) == 15  # every batch applied exactly once
-
-
 def test_read_scd_store_missing_raises_typed(spark, tmp_path):
     from beis_orp_data_service_spark.streaming import pipeline as st
 

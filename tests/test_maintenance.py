@@ -7,6 +7,7 @@ import os
 from pyspark.sql import functions as F
 
 from beis_orp_data_service_spark.operators import maintenance as mt
+from tests.test_streaming import assert_reads_only_manifest_pairs
 
 
 def _fragmented(spark, path, n_files=24):
@@ -186,13 +187,8 @@ def test_compact_scd_store_single_epoch_stream_continues(spark, tmp_path):
     assert len(epochs) == 1  # every live bucket in ONE epoch dir
     after = sorted(map(tuple, st.read_scd_store(spark, store).collect()))
     assert before == after
-    # manifest-pruned read still static-prunes on the partition columns
-    sink2 = st.ParquetScdSink(spark, store, "user_id", "ts", "event_id", n_buckets=5)
-    _, mapping = sink2._current_manifest()
-    plan = (
-        sink2._store_df(mapping)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "PartitionFilters" in plan and "epoch" in plan
+    # the read opens only the compacted epoch's manifest-named buckets
+    assert_reads_only_manifest_pairs(spark, store)
 
     # the stream keeps going: next micro-batch = next epoch, SCD intact
     sink(mk([(303, 100, "c", "x3")]), 3)
@@ -324,14 +320,14 @@ def test_asof_dangling_manifest_raises_typed_error(spark, tmp_path):
 
 
 def test_compact_scd_gc_spares_inflight_epoch(spark, tmp_path):
-    """Round-6 ADVICE: an epoch directory NEWER than the compaction's
-    own commit (data written, manifest not yet committed — an in-flight
-    concurrent micro-batch or a crash orphan about to be replayed over)
-    must survive GC in BOTH history modes."""
+    """An epoch directory NEWER than the newest commit
+    (data written, manifest not yet committed — an in-flight concurrent
+    micro-batch or a crash orphan about to be replayed over) must
+    survive compaction GC in BOTH history modes, and history vacuum."""
     from beis_orp_data_service_spark.streaming import pipeline as st
 
-    for retain in (False, True):
-        store = str(tmp_path / f"scd_inflight_{retain}")
+    for gc, retain in (("compact", False), ("compact", True), ("vacuum", True)):
+        store = str(tmp_path / f"scd_inflight_{gc}_{retain}")
         sink = st.ParquetScdSink(
             spark, store, "user_id", "ts", "event_id", retain_history=retain
         )
@@ -340,7 +336,7 @@ def test_compact_scd_gc_spares_inflight_epoch(spark, tmp_path):
         )
         sink(mk([(1, 1, "a", "x"), (2, 2, "a", "y")]), 0)
         sink(mk([(3, 3, "b", "z")]), 1)
-        commit_id, _ = sink._current_manifest()
+        commit_id, _ = st.scd_manifest(spark, store)
         # simulate the in-flight writer: epoch data far ahead of any
         # manifest (compaction will commit commit_id+1; this is newer)
         inflight = commit_id + 5
@@ -349,9 +345,12 @@ def test_compact_scd_gc_spares_inflight_epoch(spark, tmp_path):
         ).write.partitionBy(st.ParquetScdSink.BUCKET).parquet(
             f"{store}/data/epoch={inflight}"
         )
-        mt.compact_scd_store(spark, store, retain_history=retain)
-        assert os.path.isdir(f"{store}/data/epoch={inflight}"), (
-            f"retain_history={retain}: in-flight epoch GC'd"
+        if gc == "compact":
+            mt.compact_scd_store(spark, store, retain_history=retain)
+        else:
+            st.scd_vacuum_history(spark, store, keep_from=commit_id)
+        assert os.path.isdir(f"{store}/data/epoch={inflight}/_bucket=0"), (
+            f"{gc} retain_history={retain}: in-flight epoch GC'd"
         )
         # live reads are unaffected by the unreferenced dir
         assert st.read_scd_store(spark, store).count() == 3

@@ -250,3 +250,28 @@ def test_write_section_replaces_the_preamble_only(tmp_path):
     text = p.read_text()
     rest = MAIN_TEXT[MAIN_TEXT.index("## simhash_pairs"):]
     assert text == "# SCALING — new\n\ntable\n\n" + rest
+
+
+def test_measure_warms_each_query_before_timing_either_size(monkeypatch):
+    calls = []
+
+    class Frame:
+        def __init__(self, d):
+            self.d = d
+
+        def count(self):
+            return 10 if self.d == "big" else 5
+
+    monkeypatch.setitem(
+        declared.REGISTRY, "fake_q", declared.QueryDef(lambda _s, d: Frame(d), None)
+    )
+    monkeypatch.setattr(sp, "materialize", lambda df: calls.append(("warm", df.d)))
+
+    def timed(_spark, fn, d, reps):
+        calls.append(("time", d))
+        return [2.0 if d == "big" else 1.0] * reps
+
+    monkeypatch.setattr(sp, "time_query", timed)
+    m = sp.measure(None, "fake_q", "base", "big", 1)
+    assert calls == [("warm", "base"), ("time", "base"), ("time", "big")]
+    assert (m.base_s, m.big_s, m.ratio, m.rows_ratio) == (1.0, 2.0, 2.0, 2.0)

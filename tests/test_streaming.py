@@ -216,7 +216,8 @@ def test_scd_sink_untouched_buckets_not_rewritten(spark, events_json_dir, tmp_pa
     """Per-batch I/O must be O(touched buckets), not O(store): after the
     initial load, a micro-batch containing a single key may rewrite only
     that key's bucket — every other bucket's files stay byte-identical
-    (dynamic partition overwrite, never a full-store rewrite)."""
+    (the batch writes only its buckets to a new epoch directory, never
+    a full-store rewrite)."""
     import json as _json
     import os
 
@@ -250,6 +251,54 @@ def test_scd_sink_untouched_buckets_not_rewritten(spark, events_json_dir, tmp_pa
     assert len(out) == 201
 
 
+def assert_reads_only_manifest_pairs(spark, store):
+    """Every file ``read_scd_store`` opens lies under an
+    ``epoch=E/_bucket=B`` directory the latest manifest names."""
+    import re
+
+    _, mapping = st.scd_manifest(spark, store)
+    live = {f"epoch={e}/{st.BUCKET}={b}" for b, e in mapping.items()}
+    files = st.read_scd_store(spark, store).inputFiles()
+    assert files
+    for f in files:
+        pair = re.search(rf"epoch=\d+/{st.BUCKET}=\d+", f)
+        assert pair and pair.group(0) in live, f
+
+
+def test_scd_store_epoch_dirs_bounded_by_live_buckets(spark, tmp_path):
+    """40 single-key batches into 8 buckets: the per-batch GC removes
+    every epoch directory the manifest no longer references, so
+    ``data/`` holds one directory per live epoch (at most n_buckets),
+    not one per batch; only the newest 10 manifests remain; and every
+    batch is applied exactly once. One empty batch rides along: it
+    commits an epoch directory holding no bucket (e.g. every message a
+    near-dup), which the next commit removes."""
+    store = str(tmp_path / "store_bounded")
+    sink = st.ParquetScdSink(spark, store, "user_id", "ts", "event_id", n_buckets=8)
+    mk = lambda rows: spark.createDataFrame(
+        rows, "event_id long, user_id long, ts string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    for i in range(40):
+        sink(mk([(i, i, f"2024-01-01T00:00:{i:02d}")]), epoch_id=i)
+        if i == 20:
+            sink(mk([]), epoch_id=100)
+    _, mapping = st.scd_manifest(spark, store)
+    epochs = {
+        int(n.split("=", 1)[1])
+        for n in os.listdir(os.path.join(store, "data"))
+        if n.startswith("epoch=")
+    }
+    assert epochs == set(mapping.values())
+    assert len(epochs) <= 8
+    manifests = [
+        n for n in os.listdir(os.path.join(store, "_manifest"))
+        if n.startswith("manifest-")
+    ]
+    assert len(manifests) == 10
+    assert st.read_scd_store(spark, store).count() == 40
+    assert_reads_only_manifest_pairs(spark, store)
+
+
 def test_scd_sink_crash_before_commit_preserves_store(spark, events_json_dir, tmp_path):
     """Crash atomicity: an epoch directory written WITHOUT a manifest
     commit (= crash between write and rename) must be invisible to
@@ -271,7 +320,7 @@ def test_scd_sink_crash_before_commit_preserves_store(spark, events_json_dir, tm
     ).withColumn("ts", F.col("ts").cast("timestamp"))
 
     # simulate the crash: perform ONLY the epoch write, no manifest
-    commit_id, mapping = sink._current_manifest()
+    commit_id, _ = st.scd_manifest(spark, store)
     orphan = commit_id + 1
     (
         one.withColumn(sink.BUCKET, sink._bucket_col(F.col("user_id")))
@@ -284,6 +333,7 @@ def test_scd_sink_crash_before_commit_preserves_store(spark, events_json_dir, tm
     mid = st.read_scd_store(spark, store).toPandas()
     assert len(mid) == len(before)
     assert 20_001 not in set(mid.event_id)
+    assert_reads_only_manifest_pairs(spark, store)
 
     # the checkpoint replays the batch: full transaction commits over
     # the orphan directory (same commit id, overwritten idempotently)
@@ -365,52 +415,6 @@ def test_session_window_stream_equals_batch_sessionize(spark, events_json_dir, t
         for r in st.sessionize(batch_events, gap_minutes=60).collect()
     }
     assert got == want_twin
-
-
-def test_tws_dedup_matches_apply_in_pandas_variant(spark, tmp_path):
-    """Spark-4 transformWithStateInPandas first-seen dedup must produce
-    the same admitted set as the applyInPandasWithState form. Gated on
-    google.protobuf (the API's worker dependency, absent here)."""
-    import json as _json
-
-    import pytest as _pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        _pytest.skip("google.protobuf not installed (transformWithState worker dep)")
-
-    # pragma: no cover - runs only where protobuf exists
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    d = tmp_path / "tws_in"
-    d.mkdir()
-    rows = [
-        {"event_id": i, "ts": "2024-01-01T00:00:00", "user_id": 1,
-         "event_type": "x", "value": 1.0, "props": "{}"}
-        for i in list(range(20)) + list(range(10))  # 10 redeliveries
-    ]
-    with open(d / "b0.json", "w") as f:
-        for r in rows:
-            f.write(_json.dumps(r) + "\n")
-    out_dir = str(tmp_path / "tws_out")
-    q = (
-        st.stream_dedup_first_seen_tws(st.stream_events(spark, str(d)))
-        .writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "tws_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = sorted(r.event_id for r in spark.read.parquet(out_dir).collect())
-    assert got == list(range(20))
 
 
 def test_lsh_dedup_stream_flags_cross_batch_near_dups(spark, tmp_path):
