@@ -2,54 +2,31 @@
 per-partition metrics, not wall time.
 
 ``task_shuffle_skew`` runs one Spark action and reports the per-task
-shuffle-read record distribution of the heaviest NEW shuffle stage —
+shuffle-read record distribution of the heaviest shuffle stage it ran —
 the number that actually pages someone at 100 TB (one reducer task
 dragging a degenerate band key while its 999 siblings finish). Wall
 time hides this on a warm 32-core box; task metrics do not.
 
-Metrics come from the Spark status REST API (``/api/v1``), which is
-the stable public surface for task metrics — the monitoring endpoint
-every Spark UI reads. It requires ``spark.ui.enabled=true`` on the
-session (the probe script ``scripts/skew_probe.py`` builds its own);
-there is no py4j callback-server dependency, so it works on any
-driver.
+Metrics come from the driver's status store (``statusTracker`` for the
+action's jobs, ``statusStore()`` for stage and task data), which Spark
+keeps with the UI off, so it works on the engine's default session.
 """
 
 from __future__ import annotations
 
-import json
 import statistics
-import urllib.request
+import uuid
+
+GROUP_KEY = "spark.jobGroup.id"
 
 
-def _get(url: str):
-    with urllib.request.urlopen(url) as r:  # local status endpoint
-        return json.load(r)
+def task_shuffle_skew(spark, action) -> dict:
+    """Run ``action()`` (any Spark action) under a job group of its own
+    and return the per-task shuffle-read record skew of the heaviest
+    shuffle-read stage of that group's jobs::
 
-
-def _api(spark) -> str:
-    sc = spark.sparkContext
-    if not sc.uiWebUrl:
-        raise RuntimeError(
-            "task_shuffle_skew needs the status REST API: build the "
-            "session with spark.ui.enabled=true"
-        )
-    return f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-
-
-def _completed_stages(spark) -> dict[tuple[int, int], dict]:
-    return {
-        (s["stageId"], s["attemptId"]): s
-        for s in _get(f"{_api(spark)}/stages?status=complete")
-    }
-
-
-def task_shuffle_skew(spark, action, max_tasks: int = 2000) -> dict:
-    """Run ``action()`` (any Spark action) and return the per-task
-    shuffle-read record skew of the heaviest new shuffle stage::
-
-        {"stage_id", "n_tasks", "max_records", "median_records",
-         "ratio", "total_records"}
+        {"stage_id", "n_tasks", "n_shuffle_tasks", "max_records",
+         "median_records", "ratio", "total_records"}
 
     ``ratio`` = max/median over tasks that read any shuffle data —
     the planted-hot-key contract is ``ratio <= ~4`` after mitigation
@@ -57,38 +34,48 @@ def task_shuffle_skew(spark, action, max_tasks: int = 2000) -> dict:
     Tasks reading zero shuffle records are excluded from the median so
     AQE's empty-partition coalescing cannot flatter the denominator.
     """
-    before = set(_completed_stages(spark))
-    action()
-    stages = _completed_stages(spark)
-    new = {k: v for k, v in stages.items() if k not in before}
-    if not new:
+    sc = spark.sparkContext
+    group = f"task-shuffle-skew-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty(GROUP_KEY)
+    sc.setLocalProperty(GROUP_KEY, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty(GROUP_KEY, prev)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    stage_ids = {
+        sid
+        for j in tracker.getJobIdsForGroup(group)
+        if (info := tracker.getJobInfo(j)) is not None
+        for sid in info.stageIds
+    }
+    stages = [
+        sd
+        for sd in map(store.lastStageAttempt, sorted(stage_ids))
+        if sd.status().toString() == "COMPLETE"
+    ]
+    if not stages:
         raise RuntimeError("action produced no completed stages")
-    sid, att = max(new, key=lambda k: new[k].get("shuffleReadRecords", 0))
-    if new[(sid, att)].get("shuffleReadRecords", 0) == 0:
-        raise RuntimeError("no new stage read shuffle data")
-    # page through the task list — a single capped fetch could drop the
-    # hot reducer, silently understating the exact number this probe
-    # exists to surface
-    tasks: list[dict] = []
-    while True:
-        page = _get(
-            f"{_api(spark)}/stages/{sid}/{att}/taskList"
-            f"?offset={len(tasks)}&length={max_tasks}"
-        )
-        tasks.extend(page)
-        if len(page) < max_tasks:
-            break
-    expected = new[(sid, att)].get("numCompleteTasks", 0)
-    if len(tasks) < expected:
+    sd = max(stages, key=lambda s: s.shuffleReadRecords())
+    sid, att = sd.stageId(), sd.attemptId()
+    if sd.shuffleReadRecords() == 0:
+        raise RuntimeError("no stage of the action read shuffle data")
+    # every retained task: a capped fetch could drop the hot reducer,
+    # silently understating the exact number this probe exists to surface
+    tasks = store.taskList(sid, att, 2**31 - 1)
+    it, recs = tasks.iterator(), []
+    while it.hasNext():
+        metrics = it.next().taskMetrics()
+        if metrics.isDefined():
+            recs.append(metrics.get().shuffleReadMetrics().recordsRead())
+    expected = sd.numCompleteTasks()
+    if tasks.size() < expected:
         raise RuntimeError(
-            f"taskList truncated: fetched {len(tasks)} of {expected} "
+            f"taskList truncated: fetched {tasks.size()} of {expected} "
             f"completed tasks for stage {sid}.{att}"
         )
-    recs = [
-        t["taskMetrics"]["shuffleReadMetrics"]["recordsRead"]
-        for t in tasks
-        if "taskMetrics" in t
-    ]
     nonzero = [r for r in recs if r > 0]
     if not nonzero:
         raise RuntimeError(

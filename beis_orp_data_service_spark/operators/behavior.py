@@ -6,7 +6,8 @@ events surface covers windows/sessionization/interval joins — these
 are the remaining classic large-scale shapes a 100 TB events table
 gets asked for). All three are pure DataFrame compositions:
 
-- ``funnel_counts``: k−1 user-co-partitioned joins (each step's
+- ``funnel_users`` / ``funnel_counts`` (its aggregate): k−1
+  user-co-partitioned joins (each step's
   earliest-qualifying timestamp depends on the previous step's), all
   shuffling on ``user_id`` — one shuffle key reused across stages, no
   window over the full table, no UDF.
@@ -44,38 +45,26 @@ def funnel_counts(
     within ``within`` of the user's FIRST steps[0] event.
 
     Returns one row per step: (step_idx, step, n_users) — n_users is
-    non-increasing down the funnel. Semantics pinned: the anchor is
+    non-increasing down the funnel; it is the lazy count of
+    :func:`funnel_users` rows with ``steps_completed > step_idx``, so
+    both share one step chain. Semantics pinned: the anchor is
     the earliest steps[0] event per user (not "any qualifying
     subsequence" — that variant is exponential and answers a different
     question); each later step takes its EARLIEST event strictly after
     the previous step's chosen time and no later than anchor+within.
     """
-    if len(steps) < 2:
-        raise ValueError("a funnel needs at least 2 steps")
-    iv = F.expr(f"INTERVAL {within}")
-    cur = (
-        events.where(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_t"))
-        .withColumn("_anchor", F.col("_t"))
-    )
-    counts = [cur.count()]
-    for s in steps[1:]:
-        nxt = events.where(F.col(type_col) == s).select(
-            user_col, F.col(ts_col).alias("_ts")
+    users = funnel_users(events, steps, within, user_col, type_col, ts_col)
+    # one global aggregate: always one row, so a step no user reaches
+    # still reports n_users 0
+    per_step = [
+        F.struct(
+            F.lit(i).alias("step_idx"),
+            F.lit(s).alias("step"),
+            F.count(F.when(F.col("steps_completed") > i, 1)).alias("n_users"),
         )
-        cur = (
-            cur.join(nxt, user_col)
-            .where((F.col("_ts") > F.col("_t")) & (F.col("_ts") <= F.col("_anchor") + iv))
-            .groupBy(user_col, "_anchor")
-            .agg(F.min("_ts").alias("_t"))
-        )
-        counts.append(cur.count())
-    spark = events.sparkSession
-    return spark.createDataFrame(
-        [(i, s, int(n)) for i, (s, n) in enumerate(zip(steps, counts))],
-        "step_idx int, step string, n_users bigint",
-    )
+        for i, s in enumerate(steps)
+    ]
+    return users.agg(F.array(*per_step).alias("_steps")).select(F.inline("_steps"))
 
 
 def funnel_users(
@@ -87,9 +76,8 @@ def funnel_users(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Per-user funnel depth: (user_id, steps_completed, anchor_ts,
-    last_step_ts) — the row-level form ``funnel_counts`` aggregates;
-    this one stays fully distributed (no driver-side counts) and is
-    the join-back surface for segmenting converted users."""
+    last_step_ts) — the row-level form ``funnel_counts`` aggregates
+    and the join-back surface for segmenting converted users."""
     if len(steps) < 2:
         raise ValueError("a funnel needs at least 2 steps")
     iv = F.expr(f"INTERVAL {within}")

@@ -1045,10 +1045,15 @@ def lsh_index_write(
     same-id exclusion only covers self-matches), flipping verdicts
     versus the first run.
 
+    Every write carries the ``_epoch`` column (NULL when unstamped), so
+    the index has one row schema and the probe reads it plainly.
+
     Epoch ids must be unique over the index's lifetime, and that is
-    VALIDATED, not a docstring convention: each stamped write records
-    the index's high-water epoch in an ``_epoch_max`` sidecar, and a
-    later stamped write with ``epoch`` BELOW it raises. The failure
+    VALIDATED, not a docstring convention: each stamped write commits
+    the index's high-water epoch as a versioned mark under ``_epochs``
+    (``hadoop_fs.write_new_versioned``; the epoch is the version, and
+    the old mark is deleted only after the new one is committed), and
+    a later stamped write with ``epoch`` BELOW it raises. The failure
     mode being blocked is a restarted stream with a FRESH checkpoint
     (epoch ids reset to 0) appending to an existing index — its probes
     would wrongly exclude the previous incarnation's epoch-0 rows,
@@ -1056,22 +1061,19 @@ def lsh_index_write(
     (equal to the high-water mark) is legitimate and passes. Recovery:
     pair the fresh checkpoint with a fresh index path, or re-seed.
     """
+    from beis_orp_data_service_spark.sources import hadoop_fs as hfs
+
     rows = (
         band_rows
         if band_rows is not None
         else lsh_band_rows(docs, id_col, text_col, band_width, perms)
     )
+    spark = rows.sparkSession
+    marks = f"{path}/_epochs"
+    prev = -1
     if epoch is not None:
-        from beis_orp_data_service_spark.sources import hadoop_fs as hfs
-
-        spark = rows.sparkSession
-        sidecar = f"{path}/_epoch_max"
-        prev = (
-            int(hfs.read_bytes(spark, sidecar).decode())
-            if hfs.exists(spark, sidecar)
-            else None
-        )
-        if prev is not None and int(epoch) < prev:
+        prev = hfs.latest_version(spark, marks, "epoch-", "")
+        if epoch < prev:
             raise ValueError(
                 f"lsh_index_write: epoch {epoch} is below the index's "
                 f"high-water epoch {prev} at {path} — a fresh stream "
@@ -1079,17 +1081,10 @@ def lsh_index_write(
                 "index path, or the replay guard would exclude the "
                 "previous incarnation's rows from probes"
             )
-        rows = rows.withColumn("_epoch", F.lit(int(epoch)).cast("long"))
-        rows.write.mode(mode).partitionBy("band").parquet(path)
-        if prev is None or int(epoch) > prev:
-            if prev is not None:
-                # hadoop rename won't overwrite; a crash between the
-                # delete and the rename only loses the high-water mark
-                # (guard re-arms on the next stamped write)
-                hfs.delete(spark, sidecar)
-            hfs.write_bytes_rename(spark, sidecar, str(int(epoch)).encode())
-        return
+    rows = rows.withColumn("_epoch", F.lit(epoch).cast("long"))
     rows.write.mode(mode).partitionBy("band").parquet(path)
+    if epoch is not None and epoch > prev:
+        hfs.write_new_versioned(spark, marks, "epoch-", "", epoch, b"", keep=1)
 
 
 def lsh_index_probe(
@@ -1121,8 +1116,8 @@ def lsh_index_probe(
     (see ``lsh_index_write(epoch=...)``) — the streaming-replay guard:
     a re-executed micro-batch must not probe against the bands its own
     crashed first attempt appended, or within-batch near-dup pairs
-    would flag each other on replay only. No-op on an index written
-    without epoch stamps (legacy layout has no ``_epoch`` column).
+    would flag each other on replay only. Unstamped rows (``_epoch``
+    NULL) always answer.
     """
     rows = (
         band_rows
@@ -1130,23 +1125,10 @@ def lsh_index_probe(
         else lsh_band_rows(new_docs, id_col, text_col, band_width, perms)
     )
     probe = rows.select("band", "band_key", F.col(id_col).alias("probe_id"))
-    # mergeSchema when the replay guard is active: on an index mixing
-    # epoch-stamped and legacy (no _epoch) files, a single arbitrary
-    # footer may lack _epoch and the guard would silently disable —
-    # merged schemas surface the column whenever ANY file carries it
-    reader = (
-        spark.read.option("mergeSchema", "true")
-        if exclude_epoch is not None
-        else spark.read
-    )
-    raw_idx = reader.parquet(path)
-    if exclude_epoch is not None and "_epoch" in raw_idx.columns:
-        raw_idx = raw_idx.where(
-            F.col("_epoch").isNull() | (F.col("_epoch") != int(exclude_epoch))
-        )
-    idx = raw_idx.select(
-        "band", "band_key", F.col(id_col).alias("index_id")
-    )
+    idx = spark.read.parquet(path)
+    if exclude_epoch is not None:
+        idx = idx.where(F.col("_epoch").isNull() | (F.col("_epoch") != exclude_epoch))
+    idx = idx.select("band", "band_key", F.col(id_col).alias("index_id"))
     joined = idx.join(probe, ["band", "band_key"])
     if exclude_same_id:
         joined = joined.where(F.col("index_id") != F.col("probe_id"))

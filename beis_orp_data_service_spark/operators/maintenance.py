@@ -5,35 +5,36 @@ A 100 TB table accumulates small files from streaming micro-batches and
 over-parallel writes; scans then pay per-file open cost and lose
 row-group locality. Compaction rewrites the data into ~target-size
 files. The commit uses an immutable-snapshot + atomic pointer pattern
-(Delta/Iceberg's manifest idea): readers mid-compaction keep a
+(Delta/Iceberg's manifest idea): each snapshot ``v<n>`` is committed by
+a versioned pointer file under ``_snapshots``
+(``hadoop_fs.write_new_versioned``), so readers mid-compaction keep a
 consistent view, and a failed compaction leaves the live snapshot
 untouched. ``streaming.pipeline.ParquetScdSink`` uses the same
 discipline per micro-batch: it writes only the touched buckets to a new
 immutable epoch directory and commits them by renaming a bucket→epoch
 manifest.
 
-File inventory goes through the Hadoop FileSystem API (not ``os``), so
-the same code paths work against HDFS / S3A / local on a real cluster.
+File inventory and pointer commits go through the Hadoop FileSystem
+API (``sources.hadoop_fs``, never ``os``), so the same code paths work
+against HDFS / S3A / local on a real cluster and from any working
+directory.
 """
 
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-CURRENT = "_CURRENT"
+from beis_orp_data_service_spark.sources import hadoop_fs as hfs
 
 
 def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """(path, bytes) for every data file under ``path``, recursively,
     skipping _metadata/_SUCCESS/hidden files. Hadoop FS API — works on
     any supported filesystem, not just local."""
-    from beis_orp_data_service_spark.sources.hadoop_fs import fs_for
-
-    _, hpath, fs = fs_for(spark, path)
+    _, hpath, fs = hfs.fs_for(spark, path)
     out: list[tuple[str, int]] = []
     it = fs.listFiles(hpath, True)
     while it.hasNext():
@@ -45,30 +46,32 @@ def list_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     return out
 
 
-def current_snapshot(root: str) -> str | None:
-    pointer = os.path.join(root, CURRENT)
-    if not os.path.exists(pointer):
-        return None
-    with open(pointer) as f:
-        return os.path.join(root, f.read().strip())
+def _snapshots_dir(root: str) -> str:
+    return f"{root.rstrip('/')}/_snapshots"
+
+
+def _snapshot_path(root: str, version: int) -> str:
+    return f"{root.rstrip('/')}/v{version:09d}"
+
+
+def current_snapshot(spark: SparkSession, root: str) -> str | None:
+    """Directory of the live snapshot of ``root``; None before the
+    first commit."""
+    v = hfs.latest_version(spark, _snapshots_dir(root), "v", "")
+    return None if v < 0 else _snapshot_path(root, v)
 
 
 def commit_snapshot(df: DataFrame, root: str, n_files: int) -> str:
-    """Write ``df`` as the next immutable snapshot of ``root`` and
-    atomically swap the ``_CURRENT`` pointer to it. Executors write the
-    data directly; the driver touches only the tiny pointer file."""
-    cur = current_snapshot(root)
-    nxt = 0 if cur is None else int(os.path.basename(cur).lstrip("v")) + 1
-    snap = f"v{nxt:09d}"
-    df.repartition(n_files).write.mode("overwrite").parquet(
-        os.path.join(root, snap)
-    )
-    os.makedirs(root, exist_ok=True)
-    tmp = os.path.join(root, "._current.tmp")
-    with open(tmp, "w") as f:
-        f.write(snap)
-    os.replace(tmp, os.path.join(root, CURRENT))
-    return os.path.join(root, snap)
+    """Write ``df`` as the next immutable snapshot ``v<n>`` of ``root``
+    and commit it with a versioned pointer file
+    (``hadoop_fs.write_new_versioned``). Executors write the data
+    directly; the driver touches only the empty pointer file."""
+    spark = df.sparkSession
+    nxt = hfs.latest_version(spark, _snapshots_dir(root), "v", "") + 1
+    snap = _snapshot_path(root, nxt)
+    df.repartition(n_files).write.mode("overwrite").parquet(snap)
+    hfs.write_new_versioned(spark, _snapshots_dir(root), "v", "", nxt, b"", keep=1)
+    return snap
 
 
 @dataclass
@@ -108,9 +111,9 @@ def compact_small_files(
 
 def read_current(spark: SparkSession, root: str) -> DataFrame:
     """Read the live snapshot of a pointer-committed table."""
-    cur = current_snapshot(root)
+    cur = current_snapshot(spark, root)
     if cur is None:
-        raise FileNotFoundError(f"no {CURRENT} pointer under {root}")
+        raise FileNotFoundError(f"no committed snapshot under {root}")
     return spark.read.parquet(cur)
 
 
@@ -136,8 +139,6 @@ def recover_lsh_compaction(spark: SparkSession, path: str) -> int:
     band whose live directory is missing while its ``_pre_compact``
     copy survives is restored. Runs automatically at the start of
     every compaction; returns the number of bands restored."""
-    from beis_orp_data_service_spark.sources import hadoop_fs as hfs
-
     pre_root = f"{path.rstrip('/')}/_pre_compact"
     if not hfs.exists(spark, pre_root):
         return 0
@@ -180,8 +181,6 @@ def compact_lsh_index(
     Single-writer assumption: run in the maintenance window, not
     concurrently with ingest appends (Delta/Iceberg get concurrency
     from manifest logs; this is the plain-parquet discipline)."""
-    from beis_orp_data_service_spark.sources import hadoop_fs as hfs
-
     recover_lsh_compaction(spark, path)
     root = path.rstrip("/")
     stats = PartitionCompactionStats(0, 0, 0, 0)

@@ -882,30 +882,16 @@ def ann_index_centroids(spark, path: str) -> np.ndarray:
     """Reload the coarse quantizer from the index's latest committed
     JSON sidecar version (bounded: ≤65,536 rows by construction).
     Doubles round-trip JSON exactly (shortest-roundtrip repr), so the
-    probe assignment is bit-identical to write time.
-
-    The index is a LONG-LIVED artifact (rewritten only on quantizer
-    drift), so sidecars written by earlier releases must stay readable:
-    falls back to the single-file ``_centroids.json`` and the original
-    ``_centroids.npy`` layouts when no versioned sidecar exists."""
+    probe assignment is bit-identical to write time. Raises
+    FileNotFoundError when no sidecar version is committed."""
     import json
 
     from beis_orp_data_service_spark.sources import hadoop_fs as hfs
 
     _, data = hfs.read_latest_versioned(spark, _centroids_dir(path), "centroids-", ".json")
-    if data is not None:
-        return np.array(json.loads(data.decode()), dtype=np.float64)
-    legacy_json = path.rstrip("/") + "/_centroids.json"
-    if hfs.exists(spark, legacy_json):
-        return np.array(
-            json.loads(hfs.read_bytes(spark, legacy_json).decode()), dtype=np.float64
-        )
-    legacy_npy = path.rstrip("/") + "/_centroids.npy"
-    if hfs.exists(spark, legacy_npy):
-        import io
-
-        return np.load(io.BytesIO(hfs.read_bytes(spark, legacy_npy)), allow_pickle=False)
-    raise FileNotFoundError(f"no committed centroid sidecar under {path}")
+    if data is None:
+        raise FileNotFoundError(f"no committed centroid sidecar under {path}")
+    return np.array(json.loads(data.decode()), dtype=np.float64)
 
 
 def ann_index_probe(

@@ -1,12 +1,16 @@
 """Shared Hadoop FileSystem helpers — the ONE place the engine touches
 ``org.apache.hadoop.fs`` through py4j.
 
-Everything that persists small control-plane artifacts (SCD-store
-manifests, IVF centroid sidecars, compaction inventories) goes through
+Everything that persists small control-plane artifacts goes through
 these instead of ``os.*``, so the code paths work identically on
-HDFS / S3A / local disk. Three near-identical hand-rolled copies of
-this idiom existed across similarity.py / streaming/pipeline.py /
-maintenance.py; fixes (e.g. rename-atomicity) now land once.
+HDFS / S3A / local disk and from any working directory. Every file that
+records which version of something is live commits through ONE
+primitive, the versioned store below:
+
+- the SCD store's bucket→epoch manifests (``streaming.pipeline``);
+- the IVF index's centroid sidecars (``operators.similarity``);
+- the snapshot pointer of a compacted table (``operators.maintenance``);
+- the LSH index's high-water epoch mark (``operators.dedup``).
 
 Atomicity model: ``write_new_versioned`` writes a temp file and renames
 it to a FRESH versioned name — rename-to-new-path is atomic on

@@ -691,7 +691,8 @@ def lsh_dedup_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_bands: int = 1,
-    epoch: int | None = None,
+    *,
+    epoch: int,
 ) -> None:
     """One micro-batch of streaming near-dup admission — the
     foreachBatch body wiring the persistent band-partitioned LSH index
@@ -766,19 +767,16 @@ def lsh_dedup_batch(
         F.coalesce("max_bands", F.lit(0)).alias("max_bands"),
         (F.coalesce("n_index_matches", F.lit(0)) > 0).alias("is_near_dup"),
     )
-    if epoch is not None:
-        # idempotent under replay: verdicts land in their epoch's own
-        # partition and a replayed epoch OVERWRITES exactly that
-        # partition (dynamic mode) instead of appending duplicates
-        (
-            out.withColumn("_epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(flagged_out)
-        )
-    else:
-        out.write.mode("append").parquet(flagged_out)
+    # idempotent under replay: verdicts land in their epoch's own
+    # partition and a replayed epoch OVERWRITES exactly that partition
+    # (dynamic mode) instead of appending duplicates
+    (
+        out.withColumn("_epoch", F.lit(epoch))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_epoch")
+        .parquet(flagged_out)
+    )
     dd.lsh_index_write(
         docs, index_path, id_col, text_col, mode="append", band_rows=rows,
         epoch=epoch,

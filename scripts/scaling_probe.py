@@ -42,6 +42,7 @@ import argparse
 import json
 import os
 import random
+import re
 import sys
 from typing import NamedTuple
 
@@ -157,13 +158,15 @@ SF_INDEPENDENT = {"stream_ingest_e2e", "scd_changes", "scd_time_travel",
 class Measured(NamedTuple):
     """One table row: best wall seconds at each size, their ratio, the
     output-rows ratio (None for rows measured before that column
-    existed) and ``age`` = probe runs since measured (0 = this run)."""
+    existed), ``age`` = probe runs since measured (0 = this run) and
+    the base directory the row was measured on (carried unchanged)."""
 
     base_s: float
     big_s: float
     ratio: float
     rows_ratio: float | None
     age: int
+    base: str | None = None
 
 
 def _perm(k: int) -> str:
@@ -326,11 +329,16 @@ def parse_rows(lines: list[str]) -> dict[str, Measured]:
     """Query name -> Measured for every registry row of the tables in
     ``lines`` (one factor's section). Cells are read by their header's
     column names, so rows written before the ``rows×`` column read
-    rows_ratio None and rows written before the ``age`` column read
-    age 1. Rows that are not registry queries (diagnosis tables'
-    ``| 1× | ...`` rows) are ignored."""
+    rows_ratio None, rows written before the ``age`` column read
+    age 1, and rows written before the ``base`` column read the
+    section's ``Base `...``` line. Rows that are not registry queries
+    (diagnosis tables' ``| 1× | ...`` rows) are ignored."""
     rows: dict[str, Measured] = {}
     cols: list[str] = []
+    header_base = next(
+        (m.group(1) for x in lines if (m := re.match(r"Base `([^`]+)`", x))),
+        None,
+    )
     for line in lines:
         if not line.startswith("|"):
             continue
@@ -345,8 +353,12 @@ def parse_rows(lines: list[str]) -> dict[str, Measured]:
             continue
         rec = dict(zip(cols, cells))
         age = _num(rec.get("age"), int)
+        base = rec.get("base")
         rows[cells[0]] = Measured(
-            *nums, _num(rec.get("rows×")), 1 if age is None else age
+            *nums,
+            _num(rec.get("rows×")),
+            1 if age is None else age,
+            header_base if base in (None, "—") else base,
         )
     return rows
 
@@ -436,8 +448,8 @@ def render_table(
 ) -> tuple[list[str], int]:
     """Markdown table lines for one factor, and its outlier count."""
     lines = [
-        f"| query | base s | {factor}× s | ratio | rows× | age | verdict |",
-        "|---|---|---|---|---|---|---|",
+        f"| query | base s | {factor}× s | ratio | rows× | age | base | verdict |",
+        "|---|---|---|---|---|---|---|---|",
     ]
     n_bad = 0
     for name, m in rows.items():
@@ -448,7 +460,7 @@ def render_table(
         rr = "—" if m.rows_ratio is None else f"{m.rows_ratio:.2f}"
         lines.append(
             f"| {name} | {m.base_s:.2f} | {m.big_s:.2f} | {m.ratio:.2f} | "
-            f"{rr} | {m.age} | {verdict} |"
+            f"{rr} | {m.age} | {m.base or '—'} | {verdict} |"
         )
     return lines, n_bad
 
@@ -471,7 +483,8 @@ def section_body(
             f"recipe, grading and growth attribution as the "
             f"{MAIN_FACTOR}× table at the top of this file; pass bar "
             f"ratio ≤ {1.5 * factor:.0f}. Rows carry forward per "
-            "factor: this table never takes rows from another.",
+            "factor, each with the `base` it was measured on: this "
+            "table never takes rows from another.",
             "",
             *table,
             "",
@@ -492,7 +505,9 @@ def section_body(
         "graded (their work is sf-independent by design).",
         "",
         "Rows measured in an earlier probe run carry forward verbatim "
-        "(`age` = probe runs since measured; 0 = fresh this run) so "
+        "(`age` = probe runs since measured; 0 = fresh this run; "
+        "`base` = the base directory the row was measured on, which "
+        "can differ from this run's) so "
         "this table always covers the FULL registry — 'no row' can "
         "only ever mean 'never probed', which the script itself fails "
         f"on (exit 2). Carried rows older than {MAX_CARRY_AGE} runs "
@@ -536,7 +551,7 @@ def measure(spark, name: str, base: str, big: str, reps: int) -> Measured:
         f"{name}: {t[base]:.2f}s -> {t[big]:.2f}s  ratio {ratio:.2f}  "
         f"rows {n[base]} -> {n[big]} ({rows_ratio:.2f}x)"
     )
-    return Measured(t[base], t[big], ratio, rows_ratio, 0)
+    return Measured(t[base], t[big], ratio, rows_ratio, 0, base)
 
 
 def main(argv: list[str] | None = None) -> int:

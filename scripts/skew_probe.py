@@ -50,10 +50,11 @@ wall time:
 
 Run:  python scripts/skew_probe.py [sf_dir] [inflate]
 Writes SKEW_PROBE.json at the repo root and prints one JSON line.
-tests/test_skew_probe.py runs this as a subprocess (it needs its own
-SparkSession with spark.ui.enabled=true for the status REST API) and
-asserts the documented bounds: naive ratio >= 6 (the incident is
-real), every mitigated ratio <= 4, agg results equal.
+The session is the engine's default ``session.get_spark`` one (task
+metrics come from the driver's status store, UI off). tests/test_skew_probe.py
+runs this as a subprocess and asserts the documented bounds: naive
+ratio >= 6 (the incident is real), every mitigated ratio <= 4, agg
+results equal.
 """
 
 from __future__ import annotations
@@ -107,17 +108,14 @@ def build(spark, sf_dir: str, inflate: int):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     inflate = int(sys.argv[2]) if len(sys.argv) > 2 else 40
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .appName("skew-probe")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4049")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    from beis_orp_data_service_spark.session import get_spark
+
+    spark = get_spark(
+        "skew-probe",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
+        shuffle_partitions=32,
     )
     spark.sparkContext.setLogLevel("ERROR")
     from beis_orp_data_service_spark.diagnostics import task_shuffle_skew

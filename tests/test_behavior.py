@@ -164,6 +164,30 @@ class TestFunnel:
         }
         assert counts == {"view": 2, "click": 1}
 
+    def test_counts_are_a_lazy_aggregate_with_unreached_steps(self, spark):
+        """Three steps, the last reached by nobody: its row reports 0.
+        Building the result launches no Spark job."""
+        from tests.conftest import spark_jobs
+
+        ev = _events(
+            spark,
+            [
+                (1, 0, 1, "view", 0.0),
+                (1, 1, 1, "click", 0.0),
+                (1, 0, 2, "view", 0.0),
+                (1, 0, 3, "purchase", 0.0),  # no view: not in funnel
+            ],
+        )
+        counts, n_jobs = spark_jobs(
+            spark, lambda: bh.funnel_counts(ev, ["view", "click", "purchase"])
+        )
+        assert n_jobs == 0
+        assert sorted(tuple(r) for r in counts.collect()) == [
+            (0, "view", 2),
+            (1, "click", 1),
+            (2, "purchase", 0),
+        ]
+
     def test_single_step_rejected(self, spark):
         with pytest.raises(ValueError):
             bh.funnel_counts(_events(spark, [(1, 0, 1, "view", 0.0)]), ["view"])

@@ -765,11 +765,58 @@ class TestLshIndexEpochGuards:
                 self._docs(spark, [(3, t)]), path, mode="append", epoch=0
             )
 
+    def test_crashed_mark_commit_keeps_the_previous_mark(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A crash while committing epoch 6's high-water mark leaves
+        epoch 5's mark in place, so a fresh-checkpoint write of epoch 0
+        is still refused."""
+        import pytest as _pytest
+
+        from beis_orp_data_service_spark.operators import dedup as dd
+        from beis_orp_data_service_spark.sources import hadoop_fs as hfs
+
+        path = str(tmp_path / "idx_crash")
+        t = "crash window words flowing through this little document " * 2
+        dd.lsh_index_write(self._docs(spark, [(1, t)]), path, epoch=5)
+
+        def crash(*_a, **_k):
+            raise OSError("simulated crash before the rename")
+
+        with monkeypatch.context() as m:
+            m.setattr(hfs, "write_bytes_rename", crash)
+            with _pytest.raises(OSError, match="simulated crash"):
+                dd.lsh_index_write(
+                    self._docs(spark, [(2, t)]), path, mode="append", epoch=6
+                )
+        with _pytest.raises(ValueError, match="high-water epoch"):
+            dd.lsh_index_write(
+                self._docs(spark, [(3, t)]), path, mode="append", epoch=0
+            )
+
+    def test_every_index_file_has_the_epoch_column(self, spark, tmp_path):
+        """Unstamped and stamped writes share one row schema: every
+        parquet file of the index carries ``_epoch``."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        from beis_orp_data_service_spark.operators import dedup as dd
+
+        path = str(tmp_path / "idx_schema")
+        t = "one schema words flowing through this little document " * 2
+        dd.lsh_index_write(self._docs(spark, [(1, t)]), path)
+        dd.lsh_index_write(
+            self._docs(spark, [(2, t + " more")]), path, mode="append", epoch=3
+        )
+        files = glob.glob(f"{path}/band=*/*.parquet")
+        assert files
+        assert all("_epoch" in pq.read_schema(f).names for f in files)
+
     def test_exclude_epoch_survives_mixed_legacy_index(self, spark, tmp_path):
-        """An index with a legacy (unstamped) generation plus a stamped
-        append: the probe's replay guard must still see _epoch (merged
-        schema) — and exclude exactly the stamped epoch's rows while
-        legacy rows keep answering."""
+        """An index with an unstamped generation (``_epoch`` NULL) plus a
+        stamped append: the probe's replay guard excludes exactly the
+        stamped epoch's rows while unstamped rows keep answering."""
         from beis_orp_data_service_spark.operators import dedup as dd
 
         path = str(tmp_path / "idx_mixed")

@@ -65,27 +65,8 @@ def test_versioned_store_rejects_keep_zero(spark, tmp_path):
         hfs.write_new_versioned(spark, str(tmp_path / "s"), "m-", ".json", 0, b"x", keep=0)
 
 
-def test_ann_index_legacy_sidecar_fallbacks(spark, tmp_path):
-    """Indexes persisted by earlier releases (single _centroids.json,
-    or the original _centroids.npy) must stay readable."""
-    import io
-    import json
-
-    import numpy as np
-
+def test_ann_index_centroids_missing_raises_typed(spark, tmp_path):
     from beis_orp_data_service_spark.operators import similarity as sim
-
-    cents = [[1.0, 2.0], [3.0, 4.5]]
-    p1 = str(tmp_path / "idx_json")
-    os.makedirs(p1)
-    with open(os.path.join(p1, "_centroids.json"), "w") as f:
-        json.dump(cents, f)
-    assert sim.ann_index_centroids(spark, p1).tolist() == cents
-
-    p2 = str(tmp_path / "idx_npy")
-    os.makedirs(p2)
-    np.save(os.path.join(p2, "_centroids.npy"), np.array(cents))
-    assert sim.ann_index_centroids(spark, p2).tolist() == cents
 
     with pytest.raises(FileNotFoundError):
         sim.ann_index_centroids(spark, str(tmp_path / "idx_missing"))

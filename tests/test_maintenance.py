@@ -52,11 +52,30 @@ def test_recompaction_commits_new_snapshot_atomically(spark, tmp_path):
     s1 = mt.compact_small_files(spark, src, root, target_bytes=1 << 30)
     s2 = mt.compact_small_files(spark, src, root, target_bytes=1 << 30)
     assert s1.snapshot != s2.snapshot
-    with open(os.path.join(root, mt.CURRENT)) as f:
-        assert f.read().strip() == os.path.basename(s2.snapshot)
+    assert mt.current_snapshot(spark, root) == s2.snapshot
     # previous snapshot retained for in-flight readers
     assert os.path.isdir(s1.snapshot)
     assert mt.read_current(spark, root).count() == 3000
+
+
+def test_snapshot_pointer_lives_under_the_root_not_the_cwd(
+    spark, tmp_path, monkeypatch
+):
+    """A ``file://`` root: the pointer is committed under the root
+    through the Hadoop FS API, so the table reads back from any working
+    directory and nothing is written relative to the cwd."""
+    src = str(tmp_path / "frag")
+    root = f"file://{tmp_path}/table"
+    _fragmented(spark, src, n_files=4)
+    writer_cwd, reader_cwd = tmp_path / "writer_cwd", tmp_path / "reader_cwd"
+    writer_cwd.mkdir()
+    reader_cwd.mkdir()
+    monkeypatch.chdir(writer_cwd)
+    stats = mt.compact_small_files(spark, src, root, target_bytes=1 << 30)
+    monkeypatch.chdir(reader_cwd)
+    assert mt.read_current(spark, root).count() == 3000
+    assert mt.current_snapshot(spark, root) == stats.snapshot
+    assert os.listdir(writer_cwd) == [] and os.listdir(reader_cwd) == []
 
 
 # ------------------------------------------------- bucketed-store compaction

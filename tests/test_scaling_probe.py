@@ -187,14 +187,38 @@ def test_carried_rows_are_graded_like_fresh_ones():
     assert rows["cos_sim"].age == 3 and rows["jaccard_prefix_join"].age == 1
     table, n_bad = sp.render_table(rows, 10)
     assert n_bad == 1  # the fresh unattributed q_project row
-    assert table[0] == "| query | base s | 10× s | ratio | rows× | age | verdict |"
+    assert table[0] == "| query | base s | 10× s | ratio | rows× | age | base | verdict |"
     assert table[2].startswith("| q_project | 1.00 | 5.00 | 5.00 | 1.00 | 0 |")
     assert "UNATTRIBUTED" in table[2] and "(carried)" not in table[2]
-    assert table[3].startswith("| cos_sim | 1.00 | 100.00 | 100.00 | 100.00 | 3 | OK (pair-")
+    assert table[3].startswith("| cos_sim | 1.00 | 100.00 | 100.00 | 100.00 | 3 | — | OK (pair-")
     assert table[3].endswith("(carried) |")
     assert "wall>2×rows" in table[4] and table[4].endswith("(carried) |")
     # a rendered table parses back to the same rows
     assert sp.parse_rows(table) == rows
+
+
+def test_each_row_keeps_the_base_it_was_measured_on():
+    """Rows written before the ``base`` column read the section's
+    ``Base`` line; a run on another base writes its own base on its
+    fresh rows and carries every other row's base unchanged."""
+    old_section = [
+        "Base `/data/sf0.1` vs self-authored **10×** inflation (...).",
+        "",
+        "| query | base s | 10× s | ratio | rows× | age | verdict |",
+        "|---|---|---|---|---|---|---|",
+        "| cos_sim | 1.00 | 2.00 | 2.00 | 1.00 | 0 | OK |",
+        "| q_project | 1.00 | 1.00 | 1.00 | 1.00 | 2 | OK (carried) |",
+    ]
+    prior = sp.parse_rows(old_section)
+    assert {k: m.base for k, m in prior.items()} == {
+        "cos_sim": "/data/sf0.1", "q_project": "/data/sf0.1",
+    }
+    fresh = {"q_project": M(0.5, 0.6, 1.2, 1.0, 0, "/data/sf0.001")}
+    table, _ = sp.render_table(sp.merge(fresh, prior), 10)
+    body = sp.section_body("/data/sf0.001", 10, 1, "local[2]", table, 0)
+    rows = sp.parse_rows(body)
+    assert rows["q_project"].base == "/data/sf0.001"
+    assert rows["cos_sim"] == M(1.0, 2.0, 2.0, 1.0, 1, "/data/sf0.1")
 
 
 # ---- fixture cache key ----

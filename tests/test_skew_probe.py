@@ -1,9 +1,9 @@
 """Planted-hot-key skew probe (round-5 ask #8 / round-6 ask #3).
 
-Runs scripts/skew_probe.py as a subprocess — the probe needs its own
-SparkSession with spark.ui.enabled=true (task metrics come from the
-status REST API; the shared test session keeps the UI off) — and
-asserts the partition-METRIC contract, not wall time: a boilerplate
+Runs scripts/skew_probe.py as a subprocess — the probe sets session
+confs per case and ships at a fixed local[8] parallelism, so it keeps a
+session of its own (task metrics come from the driver's status store,
+UI off) — and asserts the partition-METRIC contract, not wall time: a boilerplate
 text planted on 30% of docs makes the band join's naive max/median
 task shuffle-read ratio blow past 6x, and each mitigation (AQE skew
 split, replicated-salt join, broadcast) holds it within 4x with the
