@@ -6961,8 +6961,9 @@ def _stream_ingest_e2e(spark, sf_dir):
         os.utime(p, (mtime, mtime))  # deterministic batch order
     # 60 messages over 2 micro-batches don't need the session's 32
     # shuffle partitions: 4 partitions cut per-stage task overhead ~8×
-    # across the ~dozen jobs each foreachBatch body runs (convert /
-    # enrich / LSH probe / SCD merge) — the same fixture-cost override
+    # across the ~15 jobs each foreachBatch body runs (one materialized
+    # batch, signing, LSH probe, verdict and index writes, SCD merge)
+    # — the same fixture-cost override
     # stream_dedup_ttl_e2e documents. Verdicts are partition-count
     # independent (deterministic banding + keyed merges); restored in
     # finally.

@@ -36,7 +36,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from beis_orp_data_service_spark.checkpointing import stage_checkpoint
 
@@ -1083,7 +1090,9 @@ def lsh_index_write(
             )
     rows = rows.withColumn("_epoch", F.lit(epoch).cast("long"))
     rows.write.mode(mode).partitionBy("band").parquet(path)
-    if epoch is not None and epoch > prev:
+    # an overwrite deletes ``_epochs`` with the rest of the index, so
+    # the mark is re-committed even when the epoch did not advance
+    if epoch is not None and (epoch > prev or mode == "overwrite"):
         hfs.write_new_versioned(spark, marks, "epoch-", "", epoch, b"", keep=1)
 
 
@@ -1109,8 +1118,14 @@ def lsh_index_probe(
     cosine_sim / ngram_jaccard_pairs before acting, as in the
     ingestion pipeline's classify stage.
 
-    One shuffle (the join); the index side arrives hash-partitioned
-    from its parquet layout and only colliding band keys meet.
+    The index is read with its one row schema (``band_key``, id,
+    ``_epoch``, ``band``; see :func:`lsh_index_write`), so no schema
+    inference job runs. The batch's band rows are the join's broadcast
+    build side: a batch is bounded (``maxFilesPerTrigger`` in a
+    stream), the index grows without bound and is only scanned. One
+    shuffle clusters the matches by ``probe_id``; the distinct band
+    count per pair and a caller's per-probe aggregate both run on that
+    clustering without another exchange.
 
     ``exclude_epoch``: ignore index rows stamped with that write epoch
     (see ``lsh_index_write(epoch=...)``) — the streaming-replay guard:
@@ -1125,21 +1140,29 @@ def lsh_index_probe(
         else lsh_band_rows(new_docs, id_col, text_col, band_width, perms)
     )
     probe = rows.select("band", "band_key", F.col(id_col).alias("probe_id"))
-    idx = spark.read.parquet(path)
+    schema = StructType(
+        [
+            StructField("band_key", StringType()),
+            StructField(id_col, rows.schema[id_col].dataType),
+            StructField("_epoch", LongType()),
+            StructField("band", IntegerType()),
+        ]
+    )
+    idx = spark.read.schema(schema).parquet(path)
     if exclude_epoch is not None:
         idx = idx.where(F.col("_epoch").isNull() | (F.col("_epoch") != exclude_epoch))
     idx = idx.select("band", "band_key", F.col(id_col).alias("index_id"))
-    joined = idx.join(probe, ["band", "band_key"])
+    joined = idx.join(F.broadcast(probe), ["band", "band_key"])
     if exclude_same_id:
         joined = joined.where(F.col("index_id") != F.col("probe_id"))
-    # distinct BEFORE counting: duplicate index rows for the same
+    # DISTINCT band keys per pair: duplicate index rows for the same
     # (band_key, id) — e.g. an at-least-once replay re-appending a
-    # batch — must not inflate the band-agreement evidence.
+    # batch, or one id twice in a batch — must not inflate the
+    # band-agreement evidence.
     return (
-        joined.select("band", "band_key", "index_id", "probe_id")
-        .distinct()
+        joined.repartition("probe_id")
         .groupBy("index_id", "probe_id")
-        .agg(F.count(F.lit(1)).alias("n_bands"))
+        .agg(F.countDistinct("band", "band_key").alias("n_bands"))
     )
 
 

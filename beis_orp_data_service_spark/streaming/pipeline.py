@@ -22,10 +22,11 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from beis_orp_data_service_spark.checkpointing import stage_checkpoint
 from beis_orp_data_service_spark.operators.dedup import scd_versions
 from beis_orp_data_service_spark.sources import hadoop_fs as hfs
 
@@ -146,20 +147,27 @@ def scd_commit(
     )
 
 
-def scd_read(spark: SparkSession, path: str, mapping: dict[int, int]) -> DataFrame:
+def scd_read(
+    spark: SparkSession,
+    path: str,
+    mapping: dict[int, int],
+    schema: T.StructType | None = None,
+) -> DataFrame:
     """The rows of exactly the ``(epoch, bucket)`` directories
     ``mapping`` names, with the ``_bucket`` column. Nothing else under
-    ``data/`` is listed, so superseded or orphan epochs cost nothing."""
+    ``data/`` is listed, so superseded or orphan epochs cost nothing.
+    A caller that knows the columns it needs passes them as ``schema``
+    (``_bucket`` included); the read then skips parquet schema
+    inference, which is a Spark job of its own."""
     if not mapping:
         # before the eager parquet read: a missing store must raise
         # the documented typed error, not AnalysisException
         raise FileNotFoundError(f"no committed SCD store at {path}")
     paths = [_bucket_dir(path, e, b) for b, e in sorted(mapping.items())]
-    return (
-        spark.read.option("basePath", scd_data_root(path))
-        .parquet(*paths)
-        .drop("epoch")
-    )
+    reader = spark.read.option("basePath", scd_data_root(path))
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths).drop("epoch")
 
 
 def scd_gc(spark: SparkSession, path: str, keep_from: int) -> dict[str, int]:
@@ -211,10 +219,17 @@ class ParquetScdSink:
     reference commits per SQS message batch, tdb_query_helpers.py:158-183):
 
     1. stamps the batch rows with their bucket
-       (``pmod(hash(key), n_buckets)``),
+       (``pmod(hash(key), n_buckets)``) and, once a store exists,
+       materializes the batch once (``stage_checkpoint``): the bucket
+       broadcast and the merge both read it, and without the boundary
+       each would re-run its lineage — a second source scan, and every
+       converter and model UDF upstream of the sink;
     2. reads the current store from exactly the ``epoch=E/_bucket=B``
-       directories the manifest names, and a broadcast left-semi join
-       on the bucket column drops every bucket the batch does not touch,
+       directories the manifest names, with the batch's own columns as
+       the schema (no inference job), and a broadcast left-semi join
+       on the batch's bucket column drops every bucket the batch does
+       not touch (no ``distinct``: a semi join ignores duplicate keys
+       on its build side),
     3. merges (idempotent ``scd_merge_batch`` — SCD-2 versions are
        per-key, and a key lives entirely inside one bucket, so the
        merge never needs the other buckets),
@@ -286,9 +301,9 @@ class ParquetScdSink:
         commit_id = prev_id + 1  # single writer: foreachBatch serializes
         store = None
         if mapping:
-            touched = batch.select(BUCKET).distinct()
-            store = scd_read(spark, path, mapping).join(
-                F.broadcast(touched), BUCKET, "left_semi"
+            batch = stage_checkpoint(batch, label="scd:batch")
+            store = scd_read(spark, path, mapping, batch.schema).join(
+                F.broadcast(batch.select(BUCKET)), BUCKET, "left_semi"
             )
         out = scd_merge_batch(store, batch, self.key_col, self.order_col, self.id_col)
         epoch_dir = scd_epoch_dir(path, commit_id)
@@ -693,7 +708,7 @@ def lsh_dedup_batch(
     min_bands: int = 1,
     *,
     epoch: int,
-) -> None:
+) -> DataFrame:
     """One micro-batch of streaming near-dup admission — the
     foreachBatch body wiring the persistent band-partitioned LSH index
     (operators/dedup.py lsh_index_write/probe) into an ingest stream,
@@ -702,9 +717,14 @@ def lsh_dedup_batch(
 
     1. probe: sign the BATCH only, equi-join against the store, flag
        batch docs with >= ``min_bands`` agreeing bands;
-    2. append the batch's flag verdicts to ``flagged_out``;
+    2. write the batch's flag verdicts to ``flagged_out``;
     3. append the batch's own band rows to the index, so LATER batches
        dedup against everything admitted before them.
+
+    Returns the verdicts ``(id_col, n_index_matches, max_bands,
+    is_near_dup)`` — the rows just written, materialized once
+    (``stage_checkpoint``), so a caller joins them in memory instead of
+    reading ``flagged_out`` back or re-running the probe.
 
     Work per batch is O(batch) signing + one join against colliding
     band keys — the store is never re-hashed. Probe-before-append
@@ -721,15 +741,18 @@ def lsh_dedup_batch(
     docs = batch.select(id_col, text_col)
     # sign the batch ONCE; the same band rows feed the probe join and
     # the index append (signing is the per-batch dominant cost)
-    rows = dd.lsh_band_rows(docs, id_col, text_col, 4, None).persist()
+    rows = stage_checkpoint(
+        dd.lsh_band_rows(docs, id_col, text_col, 4, None), label="lsh:signed"
+    )
+    verdicts = docs.select(F.col(id_col))
     if hfs.exists(spark, index_path):
         # replay stability: exclude_epoch drops every index row this
         # same epoch's crashed first attempt may have appended (the
         # within-batch near-dup guard); exclude_same_id additionally
         # drops self-matches from a LATER redelivery of the same id;
-        # the probe's distinct ignores duplicate band rows a replayed
-        # append leaves behind — so verdicts really are stable across
-        # replays.
+        # the probe's distinct band count ignores duplicate band rows
+        # a replayed append leaves behind — so verdicts really are
+        # stable across replays.
         hits = (
             dd.lsh_index_probe(
                 spark,
@@ -748,24 +771,25 @@ def lsh_dedup_batch(
                 F.max("n_bands").alias("max_bands"),
             )
         )
-    else:  # first batch: no index yet
-        hits = None
-    verdicts = docs.select(F.col(id_col))
-    if hits is not None:
+        # at most one hit row per batch document: broadcast it, so the
+        # batch side is not shuffled for a join of two bounded frames
         verdicts = verdicts.join(
-            hits.withColumnRenamed("probe_id", id_col), id_col, "left"
+            F.broadcast(hits.withColumnRenamed("probe_id", id_col)), id_col, "left"
         )
-    else:
+    else:  # first batch: no index yet
         verdicts = verdicts.select(
             id_col,
             F.lit(None).cast("bigint").alias("n_index_matches"),
             F.lit(None).cast("bigint").alias("max_bands"),
         )
-    out = verdicts.select(
-        id_col,
-        F.coalesce("n_index_matches", F.lit(0)).alias("n_index_matches"),
-        F.coalesce("max_bands", F.lit(0)).alias("max_bands"),
-        (F.coalesce("n_index_matches", F.lit(0)) > 0).alias("is_near_dup"),
+    out = stage_checkpoint(
+        verdicts.select(
+            id_col,
+            F.coalesce("n_index_matches", F.lit(0)).alias("n_index_matches"),
+            F.coalesce("max_bands", F.lit(0)).alias("max_bands"),
+            (F.coalesce("n_index_matches", F.lit(0)) > 0).alias("is_near_dup"),
+        ),
+        label="lsh:verdicts",
     )
     # idempotent under replay: verdicts land in their epoch's own
     # partition and a replayed epoch OVERWRITES exactly that partition
@@ -781,7 +805,7 @@ def lsh_dedup_batch(
         docs, index_path, id_col, text_col, mode="append", band_rows=rows,
         epoch=epoch,
     )
-    rows.unpersist()
+    return out
 
 
 def ingest_batch(
@@ -803,12 +827,19 @@ def ingest_batch(
     3. **near-dup admission** (:func:`lsh_dedup_batch`): sign the batch
        once, probe the persistent band-partitioned LSH index, append
        the batch's bands; verdicts land in ``flagged_out`` partitioned
-       by epoch (replay-idempotent dynamic overwrite);
+       by epoch (replay-idempotent dynamic overwrite) and come back in
+       memory — ``flagged_out`` is never read back;
     4. **SCD-2 upsert** (:class:`ParquetScdSink`): messages that
        converted cleanly AND are not near-dups of already-admitted
        documents merge into the versioned store — re-uploads of the
        same ``doc_key`` become version+1 rows, redelivered message ids
-       dedupe inside the merge.
+       dedupe inside the merge; the sink materializes its input once,
+       so convert and enrich run once per message.
+
+    The projected batch is materialized once (``stage_checkpoint``):
+    the source is scanned exactly once per batch, and the row count
+    observed on that scan ends an empty batch with nothing written,
+    without a job of its own.
 
     Message contract (the SQS stand-in of :func:`stream_events`):
     ``event_id`` = unique message id → media_id, ``user_id`` = logical
@@ -819,18 +850,19 @@ def ingest_batch(
     re-reads the whole store or index."""
     from beis_orp_data_service_spark.pipelines import ingestion as ing
 
-    msgs = batch.select(
-        F.col("event_id").alias("media_id"),
-        F.col("user_id").alias("doc_key"),
-        F.col("ts"),
-        F.upper(F.col("event_type")).alias("document_format"),
-        F.encode(F.col("props"), "utf-8").alias("content"),
-        F.col("props").alias("raw_text"),
-    ).persist()
-    # probe the persisted frame, not ``batch``: a second read of the
-    # source would count its rows twice in the query's numInputRows
-    if not msgs.take(1):
-        msgs.unpersist()
+    seen = Observation()
+    msgs = stage_checkpoint(
+        batch.select(
+            F.col("event_id").alias("media_id"),
+            F.col("user_id").alias("doc_key"),
+            F.col("ts"),
+            F.upper(F.col("event_type")).alias("document_format"),
+            F.encode(F.col("props"), "utf-8").alias("content"),
+            F.col("props").alias("raw_text"),
+        ).observe(seen, F.count(F.lit(1)).alias("n")),
+        label="stream:batch",
+    )
+    if not seen.get["n"]:
         return
     converted = ing.convert_stage(
         msgs.select("media_id", "document_format", "content")
@@ -838,7 +870,7 @@ def ingest_batch(
     enriched = ing.enrich_stage(converted)
     # near-dup admission over the RAW payload (signatures must match
     # what earlier batches indexed, independent of enrichment changes)
-    lsh_dedup_batch(
+    flags = lsh_dedup_batch(
         spark,
         index_path,
         msgs.select("media_id", F.col("raw_text").alias("text")),
@@ -846,13 +878,15 @@ def ingest_batch(
         id_col="media_id",
         epoch=epoch,
     )
-    # this epoch's partition only: the root would partition-discover
-    # every epoch ever written
-    flags = spark.read.parquet(f"{flagged_out}/_epoch={epoch}")
+    # both join sides are bounded by the batch: broadcast them rather
+    # than shuffle when the planner has no size estimate for them
     admitted = (
         enriched.where(F.col("parse_error").isNull())
-        .join(flags.where(~F.col("is_near_dup")).select("media_id"), "media_id")
-        .join(msgs.select("media_id", "doc_key", "ts"), "media_id")
+        .join(
+            F.broadcast(flags.where(~F.col("is_near_dup")).select("media_id")),
+            "media_id",
+        )
+        .join(F.broadcast(msgs.select("media_id", "doc_key", "ts")), "media_id")
         .select(
             "media_id", "doc_key", "ts", "document_format",
             "title", "language", "node_id",
@@ -863,7 +897,6 @@ def ingest_batch(
         id_col="media_id", n_buckets=n_buckets,
     )
     sink(admitted, epoch)
-    msgs.unpersist()
 
 
 def run_ingest_stream(

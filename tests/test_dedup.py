@@ -765,6 +765,23 @@ class TestLshIndexEpochGuards:
                 self._docs(spark, [(3, t)]), path, mode="append", epoch=0
             )
 
+    def test_overwrite_at_the_high_water_epoch_keeps_the_mark(self, spark, tmp_path):
+        """An overwrite deletes ``_epochs`` with the rest of the index.
+        Rewriting at the current epoch must commit the mark again, or a
+        fresh-checkpoint append at epoch 0 would pass the guard."""
+        import pytest as _pytest
+
+        from beis_orp_data_service_spark.operators import dedup as dd
+
+        path = str(tmp_path / "idx_rewrite")
+        t = "rewrite words flowing through this little document " * 2
+        dd.lsh_index_write(self._docs(spark, [(1, t)]), path, epoch=3)
+        dd.lsh_index_write(self._docs(spark, [(2, t)]), path, epoch=3)
+        with _pytest.raises(ValueError, match="high-water epoch"):
+            dd.lsh_index_write(
+                self._docs(spark, [(3, t)]), path, mode="append", epoch=0
+            )
+
     def test_crashed_mark_commit_keeps_the_previous_mark(
         self, spark, tmp_path, monkeypatch
     ):

@@ -25,12 +25,16 @@ def events_json_dir(spark, tmp_path):
     d = tmp_path / "stream_in"
     d.mkdir()
     for i, chunk in enumerate([rows[:100], rows[100:]]):
-        with open(d / f"batch{i}.json", "w") as f:
-            for r in chunk:
-                r = dict(r)
-                r["ts"] = r["ts"].isoformat()
-                f.write(json.dumps(r) + "\n")
+        _write_events(d / f"batch{i}.json", chunk)
     return str(d)
+
+
+def _write_events(path, rows):
+    with open(path, "w") as f:
+        for r in rows:
+            r = dict(r)
+            r["ts"] = r["ts"].isoformat()
+            f.write(json.dumps(r) + "\n")
 
 
 def test_stream_tumbling_equals_batch(spark, events_json_dir, tmp_path):
@@ -96,6 +100,27 @@ def test_scd_upsert_redelivery_idempotent(spark, events_json_dir, tmp_path):
     out = st.read_scd_store(spark, store).toPandas()
     assert len(out) == 200
     assert (out.groupby("user_id").version.max() == out.groupby("user_id").size()).all()
+
+
+def test_scd_upsert_stream_reads_each_batch_once(spark, tmp_path):
+    """Once the store exists, the sink's bucket broadcast and its merge
+    both read the batch. Two runs on one checkpoint must each report
+    the rows they delivered as numInputRows: a batch body that scanned
+    its batch twice would report a multiple of them."""
+    events = load_table(spark, SF_SMOKE, "events").orderBy("event_id").limit(80)
+    rows = [r.asDict() for r in events.collect()]
+    src = tmp_path / "in"
+    src.mkdir()
+    store = str(tmp_path / "store")
+    for i, chunk in enumerate([rows[:50], rows[50:]]):
+        _write_events(src / f"b{i}.json", chunk)
+        q = st.run_scd_upsert_stream(spark, str(src), store)
+        try:
+            q.processAllAvailable()
+            assert [p["numInputRows"] for p in q.recentProgress] == [len(chunk)]
+        finally:
+            q.stop()
+    assert st.read_scd_store(spark, store).count() == 80
 
 
 def test_stateful_dedup_exactly_once_across_restarts(spark, tmp_path):
@@ -556,10 +581,7 @@ def test_ingest_batch_replay_within_batch_neardup_pair(spark, tmp_path):
         _ingest_msg(100, 1, "<p>" + pair_text + "</p>"),
         _ingest_msg(101, 2, "<p>" + pair_text + " extra</p>"),
     ]
-    batch = spark.createDataFrame(
-        [tuple(m[k] for k in ("event_id", "ts", "user_id", "event_type", "value", "props")) for m in rows],
-        "event_id bigint, ts string, user_id bigint, event_type string, value double, props string",
-    ).withColumn("ts", F.to_timestamp("ts"))
+    batch = _ingest_df(spark, rows)
     st.ingest_batch(spark, batch, idx, store, flags, epoch=0)
     first = sorted(
         (r.media_id, r.doc_key) for r in st.read_scd_store(spark, store).collect()
@@ -584,6 +606,52 @@ def _ingest_msg(eid, key, text, fmt="HTML", ts="2024-01-01T00:00:00"):
         "value": 0.0,
         "props": text,
     }
+
+
+def _ingest_df(spark, msgs):
+    return spark.createDataFrame(
+        [tuple(m[k] for k in ("event_id", "ts", "user_id", "event_type", "value", "props")) for m in msgs],
+        "event_id bigint, ts string, user_id bigint, event_type string, value double, props string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+
+
+def test_ingest_batch_job_count(spark, tmp_path):
+    """A micro-batch against an existing index and store runs at most
+    15 Spark jobs. It ran 22 while the batch was re-scanned for an
+    emptiness probe, the verdicts were written and read back, and the
+    sink evaluated its converter lineage twice. The verdicts still land
+    in ``flagged_out``: one row per message of the batch."""
+    from tests.conftest import spark_jobs
+
+    idx = str(tmp_path / "idx")
+    store = str(tmp_path / "store")
+    flags = str(tmp_path / "flags")
+    t1 = "seed document on emissions standards for coastal regions " * 3
+    t2 = "seed document on workplace safety inspection rules " * 3
+    seed = [_ingest_msg(1, 100, t1), _ingest_msg(2, 200, t2)]
+    st.ingest_batch(spark, _ingest_df(spark, seed), idx, store, flags, epoch=0)
+    batch = [
+        _ingest_msg(3, 300, t1 + " tail"),  # near-dup of message 1
+        _ingest_msg(4, 200, "rewritten safety rules with new wording " * 3,
+                    ts="2024-01-02T00:00:00"),  # re-upload of doc_key 200
+        _ingest_msg(5, 500, "fresh document about financial conduct " * 3),
+    ]
+    _, n_jobs = spark_jobs(
+        spark,
+        lambda: st.ingest_batch(
+            spark, _ingest_df(spark, batch), idx, store, flags, epoch=1
+        ),
+    )
+    assert n_jobs <= 15
+    got = sorted(
+        (r.media_id, r.is_near_dup)
+        for r in spark.read.parquet(flags).where("_epoch = 1").collect()
+    )
+    assert got == [(3, True), (4, False), (5, False)]
+    versions = {
+        r.media_id: r.version for r in st.read_scd_store(spark, store).collect()
+    }
+    assert versions == {1: 1, 2: 1, 4: 2, 5: 1}
 
 
 def test_ingest_stream_e2e_restart_no_dup_no_loss(spark, tmp_path):
