@@ -8706,11 +8706,13 @@ def _rfm_scores(spark, sf_dir):
 @declared("rfm_two_pass", bh_ops.rfm_scores_oracle_sql("events"))
 def _rfm_two_pass(spark, sf_dir):
     # The SCALE spelling of rfm_scores under the SAME oracle:
-    # billions of users make "one row per user" a single
-    # window task, so each axis routes through ranks.distributed_ntile
-    # (range-partition → P-row offset pull → per-partition row_number
-    # → exact NTILE bucket math) — bit-identical output, no
-    # unpartitioned window anywhere in the plan.
+    # billions of users make "one row per user" a single window task,
+    # so the three axes are stacked into one (user, axis, key) frame
+    # and ranked by ONE ranks.grouped_ntile per axis (range-partition →
+    # in-plan per-partition offsets → per-partition running count →
+    # exact NTILE bucket math), pivoted back and joined once —
+    # bit-identical output, no unpartitioned window anywhere in the
+    # plan.
     return bh_ops.rfm_scores(
         _t(spark, sf_dir, "events"), method="two_pass", n_parts=8
     )
@@ -8725,9 +8727,10 @@ def _rfm_two_pass(spark, sf_dir):
 )
 def _ks_two_pass(spark, sf_dir):
     # ks_drift's scale spelling under the SAME oracle: the ECDF
-    # running sums go through ranks.prefix_sums (range-partition +
-    # offset broadcast + per-partition cumulative) instead of one
-    # unpartitioned ordered window over the distinct-value grid.
+    # running sums go through ranks.grouped_prefix_sums with no group
+    # columns (range-partition + in-plan offsets + per-partition
+    # cumulative) instead of one unpartitioned ordered window over the
+    # distinct-value grid.
     return an_ops.ks_statistic(
         _t(spark, sf_dir, "events"), "event_type",
         F.round(F.col("value") * 100), "event_id", "click", "view",
@@ -8743,8 +8746,10 @@ def _ks_two_pass(spark, sf_dir):
     ),
 )
 def _mw_two_pass(spark, sf_dir):
-    # mannwhitney_ab's scale spelling under the SAME oracle: doubled
-    # tie-group ranks from prefix_sums' exact global running sums.
+    # mannwhitney_ab's scale spelling: the same oracle function with a
+    # different group pair (click/view here, click/purchase there).
+    # Doubled tie-group ranks come from the exact global running sums
+    # of ranks.grouped_prefix_sums with no group columns.
     return an_ops.mannwhitney_u(
         _t(spark, sf_dir, "events"), "event_type",
         F.round(F.col("value") * 100), "event_id", "click", "view",

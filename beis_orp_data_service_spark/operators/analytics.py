@@ -1236,10 +1236,11 @@ def ks_statistic(
     not rows; same caveat class as group_quantiles for pathological
     all-distinct columns — opt in when the value grid is known
     bounded); ``method="two_pass"`` (default) routes the cumulative
-    through :func:`~beis_orp_data_service_spark.operators.ranks.prefix_sums`
-    (range-partition + P-row offset pull + per-partition running sum)
-    — identical output, no single-task window, for all-distinct value
-    grids at corpus scale. Output one row:
+    through :func:`~beis_orp_data_service_spark.operators.ranks.
+    grouped_prefix_sums` with ``group_cols=[]`` (range-partition +
+    in-plan per-partition offsets + per-partition running sum, no
+    driver pull) — identical output, no single-task window, for
+    all-distinct value grids at corpus scale. Output one row:
     (n_a, n_b, d_num, d_den, d_milli) with d_num/d_den the exact
     rational and d_milli = 1000·d_num DIV d_den."""
     from pyspark.sql import Window
@@ -1257,10 +1258,12 @@ def ks_statistic(
         F.sum(F.when(F.col("grp") == group_b, 1).otherwise(0)).alias("cb"),
     )
     if method == "two_pass":
-        from beis_orp_data_service_spark.operators.ranks import prefix_sums
+        from beis_orp_data_service_spark.operators.ranks import (
+            grouped_prefix_sums,
+        )
 
-        cum = prefix_sums(
-            per_val, [F.col("value")], ["ca", "cb"], label="ks"
+        cum = grouped_prefix_sums(
+            per_val, [], [F.col("value")], ["ca", "cb"], label="ks"
         ).select(
             F.col("ca_cum").alias("cum_a"), F.col("cb_cum").alias("cum_b")
         )
@@ -1352,8 +1355,9 @@ def mannwhitney_u(
     per distinct value, then the running rank sums over the value grid
     — ``method="window"`` (opt-in, one ordered window bounded by
     value cardinality) or ``method="two_pass"`` (the scale-safe
-    :func:`~beis_orp_data_service_spark.operators.ranks.prefix_sums`
-    spelling, identical output), totals broadcast. Output one row:
+    :func:`~beis_orp_data_service_spark.operators.ranks.
+    grouped_prefix_sums` spelling with ``group_cols=[]``, identical
+    output), totals broadcast. Output one row:
     (n_a, n_b, u2x_a, u2x_b, auc_milli) where u2x_* are 2·U and
     auc_milli = 1000·U_a DIV (n_a·n_b) — the common-language effect
     size (P(a > b) + ½P(a = b))."""
@@ -1373,11 +1377,13 @@ def mannwhitney_u(
     )
     # doubled average rank of this tie group = 2·(rows before) + t + 1
     if method == "two_pass":
-        from beis_orp_data_service_spark.operators.ranks import prefix_sums
+        from beis_orp_data_service_spark.operators.ranks import (
+            grouped_prefix_sums,
+        )
 
         per_val = per_val.withColumn("ct", F.col("ca") + F.col("cb"))
-        ranked = prefix_sums(
-            per_val, [F.col("value")], ["ct"], label="mw"
+        ranked = grouped_prefix_sums(
+            per_val, [], [F.col("value")], ["ct"], label="mw"
         ).select(
             "ca",
             "cb",

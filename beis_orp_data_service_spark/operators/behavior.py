@@ -28,6 +28,8 @@ partitions.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -406,14 +408,17 @@ def rfm_scores(
     Scale note — ``method``:
 
     - ``"two_pass"`` (default): billions of users make "one row per
-      user" a single-task bottleneck; the default routes each axis
-      through
-      :func:`~beis_orp_data_service_spark.operators.ranks.distributed_ntile`
-      (range-partition → P-row offset pull → per-partition
-      ``row_number``) — IDENTICAL output (same NTILE bucket math,
-      equality-tested in tests/test_behavior.py), no unpartitioned
-      window; ``n_parts`` sizes the range partitions (~n_users/P rows
-      each).
+      user" a single-task bottleneck; the default stacks the three
+      axes into one ``(user, axis, key)`` frame (recency key negated so
+      it sorts descending, each axis keeping its window's NULL
+      placement) and ranks it with ONE
+      :func:`~beis_orp_data_service_spark.operators.ranks.grouped_ntile`
+      per ``axis`` (range-partition → in-plan per-partition offsets →
+      per-partition running count), then pivots the axes back and
+      joins them to the per-user table once — IDENTICAL output (same
+      NTILE bucket math, equality-tested in tests/test_behavior.py),
+      no unpartitioned window; ``n_parts`` sizes the range partitions
+      (~3·n_users/P rows each).
     - ``"ntile"``: three single unpartitioned windows over the USER
       table (one row per user, not events) — exact and a hair cheaper
       while user cardinality fits one task; opt in when you know the
@@ -421,6 +426,8 @@ def rfm_scores(
     """
     if method not in ("ntile", "two_pass"):
         raise ValueError(f"rfm_scores: unknown method {method!r}")
+    if n_tiles < 1:
+        raise ValueError(f"rfm_scores: n_tiles must be >= 1, got {n_tiles}")
     t_ref = events.agg(
         F.max(F.unix_micros(F.col(ts_col))).alias("m")
     ).collect()[0]["m"]
@@ -440,34 +447,62 @@ def rfm_scores(
     )
     # bucket 1 = worst, n = best on every axis: most-recent users sort
     # LAST for recency (r_days desc), heaviest last for f/m (asc)
-    orders = {
-        "r_score": [F.col("r_days").desc(), F.col(user_col)],
-        "f_score": [F.col("f_n").asc(), F.col(user_col)],
-        "m_score": [F.col("m_cents").asc(), F.col(user_col)],
-    }
     if method == "two_pass":
         from beis_orp_data_service_spark.checkpointing import stage_checkpoint
-        from beis_orp_data_service_spark.operators.ranks import (
-            distributed_ntile,
-        )
+        from beis_orp_data_service_spark.operators.ranks import grouped_ntile
 
-        # each axis ranks the SAME per-user table independently (not
-        # chained — chaining re-executes every earlier axis's join +
-        # window inside the next axis's offset pull); checkpoint the
-        # 4-consumer base once, lazily
+        # one ascending key per axis; "nulls_after" puts NULL keys
+        # where that axis's window ordering does (DESC: last, ASC:
+        # first), since negating r_days alone would move them
+        axes = {
+            "r_score": (-F.col("r_days"), F.col("r_days").isNull()),
+            "f_score": (F.col("f_n"), F.col("f_n").isNotNull()),
+            "m_score": (F.col("m_cents"), F.col("m_cents").isNotNull()),
+        }
+        # the per-user table feeds the stacked ranking and the final
+        # join; checkpoint it once, lazily
         base = stage_checkpoint(per_user, eager=False, label="rfm:per_user")
-        scored = base
-        for out_col, sort_cols in orders.items():
-            axis = distributed_ntile(
-                base, sort_cols, n_tiles, out_col,
-                n_parts=n_parts, label=f"rfm:{out_col}",
-            ).select(user_col, out_col)
-            scored = scored.join(axis, user_col)
-        scored = scored.select(
+        stacked = reduce(
+            DataFrame.unionByName,
+            (
+                base.select(
+                    user_col,
+                    F.lit(axis).alias("axis"),
+                    nulls_after.alias("nulls_after"),
+                    key.alias("key"),
+                )
+                for axis, (key, nulls_after) in axes.items()
+            ),
+        )
+        tiles = (
+            grouped_ntile(
+                stacked,
+                ["axis"],
+                [F.col("nulls_after"), F.col("key"), F.col(user_col)],
+                n_tiles,
+                "tile",
+                n_parts=n_parts,
+                label="rfm",
+            )
+            .groupBy(F.col(user_col).alias("tile_user"))
+            .pivot("axis", list(axes))
+            .agg(F.first("tile"))
+        )
+        # NULL-safe: the ntile spelling scores a NULL user as one more
+        # row; the renamed key keeps the condition from resolving to
+        # base's own column on both sides
+        scored = base.join(
+            tiles, F.col(user_col).eqNullSafe(F.col("tile_user"))
+        ).select(
             user_col, "r_days", "f_n", "m_cents",
             "r_score", "f_score", "m_score",
         )
     else:
+        orders = {
+            "r_score": [F.col("r_days").desc(), F.col(user_col)],
+            "f_score": [F.col("f_n").asc(), F.col(user_col)],
+            "m_score": [F.col("m_cents").asc(), F.col(user_col)],
+        }
         scored = per_user.select(
             user_col,
             "r_days",

@@ -24,11 +24,13 @@ Usage: python scripts/artifact_check.py
 from __future__ import annotations
 
 import json
+import pathlib
 import re
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> int:
@@ -37,7 +39,7 @@ def main() -> int:
     n_reg = len(declared.REGISTRY)
     errs: list[str] = []
 
-    cj = json.load(open("/root/repo/CORRECTNESS_LOCAL.json"))
+    cj = json.load(open(ROOT / "CORRECTNESS_LOCAL.json"))
     if cj.get("n_queries") != n_reg:
         errs.append(
             f"CORRECTNESS_LOCAL.json records {cj.get('n_queries')} queries "
@@ -47,7 +49,7 @@ def main() -> int:
     if cj.get("n_fail", 1) != 0:
         errs.append(f"CORRECTNESS_LOCAL.json records n_fail={cj.get('n_fail')}")
 
-    aj = json.load(open("/root/repo/CORRECTNESS_ALT.json"))
+    aj = json.load(open(ROOT / "CORRECTNESS_ALT.json"))
     if aj.get("n_queries") != n_reg:
         errs.append(
             f"CORRECTNESS_ALT.json records {aj.get('n_queries')} queries "
@@ -57,7 +59,7 @@ def main() -> int:
     if aj.get("n_fail", 1) != 0:
         errs.append(f"CORRECTNESS_ALT.json records n_fail={aj.get('n_fail')}")
 
-    bj = json.load(open("/root/repo/BENCH_LOCAL.json"))
+    bj = json.load(open(ROOT / "BENCH_LOCAL.json"))
     n_bench = len(bj.get("queries", {}))
     if n_bench != n_reg:
         errs.append(
@@ -65,7 +67,7 @@ def main() -> int:
             f"{n_reg} — re-run bench.py after the last code commit"
         )
 
-    tail = open("/root/repo/PYTEST_LOCAL.txt").read()
+    tail = open(ROOT / "PYTEST_LOCAL.txt").read()
     m = re.search(r"(\d+) passed(?:, (\d+) skipped)?", tail)
     if not m:
         errs.append("PYTEST_LOCAL.txt has no '<N> passed' record")
@@ -77,7 +79,7 @@ def main() -> int:
             [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q"],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         ).stdout
         mc = re.search(r"(\d+) tests? collected", out)
         collected = int(mc.group(1)) if mc else -1

@@ -35,10 +35,11 @@ Usage: python scripts/audit_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import pathlib
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 import os  # noqa: E402
 
@@ -205,7 +206,8 @@ ALLOW_GLOBAL_WINDOW: dict[str, str] = {
     "quantile_sketch": "rank over a k-row bottom-k sketch",
     # one-pass CDF spellings over the DISTINCT-VALUE table (value-
     # domain-bounded, not corpus-bounded); the corpus-scale route is
-    # the two_pass twin (ks_two_pass / mw_two_pass, prefix_sums)
+    # the two_pass twin (ks_two_pass / mw_two_pass, grouped_prefix_sums
+    # with no group columns)
     "ks_drift": "cum-sum over distinct metric values; twin: ks_two_pass",
     "mannwhitney_ab": "rank-sum over distinct values; twin: mw_two_pass",
     # one-pass ntile over the per-user frame — the documented small-

@@ -15,13 +15,15 @@ from __future__ import annotations
 
 import json
 import math
+import pathlib
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from beis_orp_data_service_spark import declared as declared_mod  # noqa: E402
@@ -161,7 +163,7 @@ def main() -> int:
             "n_fail": n_fail,
             "queries": record,
         }
-        with open("/root/repo/CORRECTNESS_LOCAL.json", "w") as f:
+        with open(ROOT / "CORRECTNESS_LOCAL.json", "w") as f:
             json.dump(out, f, indent=1, sort_keys=True)
         print(f"wrote CORRECTNESS_LOCAL.json ({len(record)} queries)")
     print(f"\n{'ALL OK' if n_fail == 0 else f'{n_fail} FAILURES'}")

@@ -46,11 +46,13 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "scripts"))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -402,7 +404,7 @@ def flag_columns(pdf: pd.DataFrame) -> list[str]:
 def main() -> int:
     base_sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    alt_sf = "/root/repo/.alt/" + os.path.basename(os.path.normpath(base_sf))
+    alt_sf = str(ROOT / ".alt" / os.path.basename(os.path.normpath(base_sf)))
 
     spark = get_spark("oracle-alt")
     build_alt(spark, base_sf, alt_sf)
@@ -423,7 +425,7 @@ def main() -> int:
     # base-run row counts for the "zero rows on BOTH datasets" check
     base_rows: dict[str, int] = {}
     try:
-        with open("/root/repo/CORRECTNESS_LOCAL.json") as f:
+        with open(ROOT / "CORRECTNESS_LOCAL.json") as f:
             base_rows = {
                 k: v.get("rows") or 0
                 for k, v in json.load(f)["queries"].items()
@@ -575,7 +577,7 @@ def main() -> int:
                 print(f"ok   {name}: {len(spark_pdf)} rows [{dt}s]")
         record[name] = rec
     if not only:
-        with open("/root/repo/CORRECTNESS_ALT.json", "w") as f:
+        with open(ROOT / "CORRECTNESS_ALT.json", "w") as f:
             json.dump(
                 {
                     "base_sf": base_sf,

@@ -1,11 +1,12 @@
 from __future__ import annotations
 
+import pathlib
 import sys
 import uuid
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from beis_orp_data_service_spark.session import get_spark
 

@@ -381,22 +381,71 @@ class TestRfmScores:
             bh.rfm_scores(ev)
 
     def test_two_pass_equals_ntile_at_sf001(self, spark):
-        """The scale-safe two-pass spelling (range
-        partitions + offset pull + per-partition row_number, NO
-        unpartitioned window) must equal the ntile spelling row for
-        row on real data at sf0.01."""
+        """The scale-safe two-pass spelling (the three axes stacked
+        into one grouped ntile: range partitions + in-plan offsets +
+        per-partition running count, NO unpartitioned window) must
+        equal the ntile spelling row for row on real data at sf0.01,
+        plus one user whose every value is NULL (NULL m_cents must keep
+        the ASC axis's NULLS FIRST placement in the stacked key) and a
+        NULL user id (scored as one more row by the window spelling)."""
         from beis_orp_data_service_spark.catalog import load_table
         from tests.conftest import SF_CORRECT
 
         ev = load_table(spark, SF_CORRECT, "events")
-        a = sorted(map(tuple, bh.rfm_scores(ev, method="ntile").collect()))
+        one_user = ev.select(F.min("user_id")).first()[0]
+        null_user = (
+            ev.where(F.col("user_id") == one_user)
+            .withColumn("user_id", F.lit(-1).cast(ev.schema["user_id"].dataType))
+            .withColumn("value", F.lit(None).cast(ev.schema["value"].dataType))
+        )
+        null_id = ev.where(F.col("user_id") == one_user).withColumn(
+            "user_id", F.lit(None).cast(ev.schema["user_id"].dataType)
+        )
+        ev = ev.unionByName(null_user).unionByName(null_id)
+        key = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
+        a = sorted(
+            map(tuple, bh.rfm_scores(ev, method="ntile").collect()), key=key
+        )
         b = sorted(
             map(
                 tuple,
                 bh.rfm_scores(ev, method="two_pass", n_parts=7).collect(),
-            )
+            ),
+            key=key,
         )
         assert a == b
+        assert a[-1][0] is None
+        assert [r for r in a if r[0] == -1][0][3] is None
+
+    def test_two_pass_job_count(self, spark):
+        """One stacked ranking for the three axes: the max-timestamp
+        probe plus one range-partitioned pass, not three per-axis
+        sample + checkpoint + count cycles (26 jobs)."""
+        from beis_orp_data_service_spark.catalog import load_table
+        from tests.conftest import SF_CORRECT, spark_jobs
+
+        ev = load_table(spark, SF_CORRECT, "events")
+        rows, n_jobs = spark_jobs(
+            spark,
+            lambda: bh.rfm_scores(ev, method="two_pass", n_parts=7).collect(),
+        )
+        assert rows
+        assert n_jobs <= 14, n_jobs
+
+    def test_bad_n_tiles_raises_before_any_job(self, spark):
+        from tests.conftest import spark_jobs
+
+        ev = _events(spark, [(1, 0, 1, "x", 1.0)])
+
+        def call():
+            try:
+                bh.rfm_scores(ev, n_tiles=0)
+            except ValueError as e:
+                return e
+
+        err, n_jobs = spark_jobs(spark, call)
+        assert "n_tiles" in str(err)
+        assert n_jobs == 0
 
     def test_bad_method_raises(self, spark):
         ev = spark.createDataFrame(

@@ -6,6 +6,7 @@ This is a fast local twin of the driver's sf0.01 correctness gate.
 from __future__ import annotations
 
 import os
+import pathlib
 
 import duckdb
 import pytest
@@ -71,7 +72,10 @@ class TestFixturePathIsolation:
         from beis_orp_data_service_spark.declared import _fixture_path
 
         a = _fixture_path("lsh_index", "/root/testdata/sf0.01")
-        b = _fixture_path("lsh_index", "/root/repo/.alt/sf0.01")
+        b = _fixture_path(
+            "lsh_index",
+            str(pathlib.Path(__file__).resolve().parents[1] / ".alt" / "sf0.01"),
+        )
         assert a != b
         assert "sf0.01" in a and "sf0.01" in b  # still human-readable
 

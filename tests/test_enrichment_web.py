@@ -3,9 +3,10 @@
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from beis_orp_data_service_spark.operators import enrichment as enr
 

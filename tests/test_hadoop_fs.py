@@ -4,11 +4,12 @@ versioned single-artifact store (manifests, sidecars)."""
 from __future__ import annotations
 
 import os
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from beis_orp_data_service_spark.sources import hadoop_fs as hfs
 

@@ -14,11 +14,12 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from beis_orp_data_service_spark.operators import models
 

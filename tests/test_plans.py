@@ -9,6 +9,8 @@ file is what catches it.
 
 from __future__ import annotations
 
+import pathlib
+
 import pytest
 
 from beis_orp_data_service_spark import declared
@@ -312,7 +314,8 @@ def test_global_window_detector_print_contract():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "audit_plans", "/root/repo/scripts/audit_plans.py"
+        "audit_plans",
+        pathlib.Path(__file__).resolve().parents[1] / "scripts" / "audit_plans.py",
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -1,6 +1,6 @@
-"""The scalable exact-rank / distributed-ntile helper:
-the two-pass replacement for the unpartitioned-window class must equal
-the window spelling bit-for-bit."""
+"""The scalable exact-rank / ntile / running-sum helpers: the two-pass
+replacement for the unpartitioned-window class must equal the window
+spelling bit-for-bit, grouped and (``group_cols=[]``) global."""
 
 from __future__ import annotations
 
@@ -8,6 +8,26 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from beis_orp_data_service_spark.operators import ranks
+from tests.conftest import spark_jobs
+
+
+def _global_ranks(df, sort_cols, n_parts):
+    """``(ranked, n_rows)`` for the whole frame as one group; every
+    row must carry the same group total."""
+    out = ranks.grouped_exact_ranks(df, [], sort_cols, n_parts=n_parts)
+    totals = {r._gtotal for r in out.select("_gtotal").distinct().collect()}
+    assert len(totals) == 1, totals
+    return out.drop("_gtotal"), totals.pop()
+
+
+def _ntile_reference(rank, n_rows, n_tiles):
+    """SQL NTILE's fill rule in Python ints: the first ``n_rows mod
+    n_tiles`` buckets hold one row more."""
+    q, rem = divmod(n_rows, n_tiles)
+    cut = rem * (q + 1)
+    if rank <= cut:
+        return (rank - 1) // (q + 1) + 1
+    return rem + (rank - cut - 1) // q + 1
 
 
 class TestExactGlobalRanks:
@@ -15,9 +35,7 @@ class TestExactGlobalRanks:
         df = spark.createDataFrame(
             [((i * 7919) % 500, i) for i in range(1000)], "v long, id long"
         ).repartition(16)
-        got, n = ranks.exact_global_ranks(
-            df, [F.col("v").desc(), F.col("id")], n_parts=7
-        )
+        got, n = _global_ranks(df, [F.col("v").desc(), F.col("id")], n_parts=7)
         assert n == 1000
         want = df.withColumn(
             "_grank",
@@ -33,13 +51,13 @@ class TestExactGlobalRanks:
         df = spark.createDataFrame(
             [((i * 31) % 97, i) for i in range(300)], "v long, id long"
         )
-        a, _ = ranks.exact_global_ranks(df, [F.col("v"), F.col("id")], n_parts=3)
-        b, _ = ranks.exact_global_ranks(df, [F.col("v"), F.col("id")], n_parts=11)
+        a, _ = _global_ranks(df, [F.col("v"), F.col("id")], n_parts=3)
+        b, _ = _global_ranks(df, [F.col("v"), F.col("id")], n_parts=11)
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
     def test_fewer_rows_than_partitions(self, spark):
         df = spark.createDataFrame([(3, 1), (1, 2), (2, 3)], "v long, id long")
-        got, n = ranks.exact_global_ranks(df, [F.col("v"), F.col("id")], n_parts=8)
+        got, n = _global_ranks(df, [F.col("v"), F.col("id")], n_parts=8)
         assert n == 3
         assert {(r.v, r._grank) for r in got.collect()} == {
             (1, 1), (2, 2), (3, 3),
@@ -51,13 +69,15 @@ class TestNtileFromRank:
         # N x n grid covering rem==0, rem>0, N<n, N==n
         for n_rows, n_tiles in [(10, 5), (11, 5), (13, 4), (3, 7), (5, 5), (1, 3)]:
             df = spark.createDataFrame(
-                [(i,) for i in range(1, n_rows + 1)], "r long"
+                [(i, n_rows) for i in range(1, n_rows + 1)], "r long, n long"
             )
             got = {
                 row.r: row.t
                 for row in df.select(
                     "r",
-                    ranks.ntile_from_rank(F.col("r"), n_rows, n_tiles).alias("t"),
+                    ranks.ntile_from_rank_col(
+                        F.col("r"), F.col("n"), n_tiles
+                    ).alias("t"),
                 ).collect()
             }
             want = {
@@ -86,7 +106,9 @@ class TestPrefixSums:
         got = sorted(
             map(
                 tuple,
-                ranks.prefix_sums(grid, [F.col("v")], ["a", "b"], n_parts=5)
+                ranks.grouped_prefix_sums(
+                    grid, [], [F.col("v")], ["a", "b"], n_parts=5
+                )
                 .select("v", "a_cum", "b_cum")
                 .collect(),
             )
@@ -130,8 +152,9 @@ class TestDistributedNtile:
         got = sorted(
             map(
                 tuple,
-                ranks.distributed_ntile(
-                    df, [F.col("v").desc(), F.col("id")], 5, "tile", n_parts=6
+                ranks.grouped_ntile(
+                    df, [], [F.col("v").desc(), F.col("id")], 5, "tile",
+                    n_parts=6,
                 ).collect(),
             )
         )
@@ -155,7 +178,7 @@ class TestDistributedNtile:
         empty partition spec (every Window here is keyed by the range
         partition id)."""
         df = spark.createDataFrame([(i, i) for i in range(100)], "v long, id long")
-        out = ranks.distributed_ntile(df, [F.col("v"), F.col("id")], 5, "t")
+        out = ranks.grouped_ntile(df, [], [F.col("v"), F.col("id")], 5, "t")
         plan = out._jdf.queryExecution().executedPlan().toString()
         # Spark prints unpartitioned windows as 'Window [...], [order...]'
         # with no partition list; partitioned ones carry the partition
@@ -166,8 +189,8 @@ class TestDistributedNtile:
 
 class TestNtileFromRankCol:
     def test_matches_python_int_form(self, spark):
-        # column-typed N must reproduce the int-typed form on the same
-        # (rem==0, rem>0, N<n, N==n, N==1) grid
+        # column-typed N must reproduce the fill rule computed in Python
+        # ints on the same (rem==0, rem>0, N<n, N==n, N==1) grid
         for n_rows, n_tiles in [(10, 5), (11, 5), (13, 4), (3, 7), (5, 5), (1, 3)]:
             df = spark.createDataFrame(
                 [(i, n_rows) for i in range(1, n_rows + 1)], "r long, n long"
@@ -182,13 +205,32 @@ class TestNtileFromRankCol:
                 ).collect()
             }
             want = {
-                row.r: row.t
-                for row in df.select(
-                    "r",
-                    ranks.ntile_from_rank(F.col("r"), n_rows, n_tiles).alias("t"),
-                ).collect()
+                r: _ntile_reference(r, n_rows, n_tiles)
+                for r in range(1, n_rows + 1)
             }
             assert got == want, (n_rows, n_tiles)
+
+    def test_bad_n_tiles_fails_before_any_job(self, spark):
+        import pytest
+
+        df = spark.createDataFrame(
+            [(i % 3, i) for i in range(50)], "g long, id long"
+        )
+
+        def call(n_tiles):
+            try:
+                ranks.grouped_ntile(
+                    df, ["g"], [F.col("id")], n_tiles, "t"
+                ).collect()
+            except ValueError as e:
+                return e
+
+        for n_tiles in (0, -2):
+            err, n_jobs = spark_jobs(spark, lambda: call(n_tiles))
+            assert "n_tiles" in str(err), n_tiles
+            assert n_jobs == 0, n_tiles
+        with pytest.raises(ValueError, match="n_tiles"):
+            ranks.ntile_from_rank_col(F.col("id"), F.lit(50), 0)
 
 
 class TestGroupedNtile:
@@ -472,19 +514,14 @@ class TestBigintExactness:
         """Bucket assignment is bigint div, not IEEE floor-divide: at
         group sizes past 2^53 a double spelling collapses adjacent
         ranks onto the same quotient and misassigns boundary rows. Pin
-        boundary ranks of a 2^60-row (virtual) group on both helpers."""
+        boundary ranks of a 2^60-row (virtual) group."""
         n_rows = 2**60  # q = 2^60//3, rem = 1
         n_tiles = 3
         q, rem = divmod(n_rows, n_tiles)
         cut = rem * (q + 1)
         # boundary ranks around the big->small bucket cut and the ends
         probes = [1, cut, cut + 1, cut + q, cut + q + 1, n_rows]
-        expect = {}
-        for r in probes:
-            if r <= cut:
-                expect[r] = (r - 1) // (q + 1) + 1
-            else:
-                expect[r] = rem + (r - cut - 1) // q + 1
+        expect = {r: _ntile_reference(r, n_rows, n_tiles) for r in probes}
         df = spark.createDataFrame(
             [(r, n_rows) for r in probes], "r long, n long"
         )
@@ -496,15 +533,7 @@ class TestBigintExactness:
                 .alias("t"),
             ).collect()
         }
-        got_int = {
-            row.r: row.t
-            for row in df.select(
-                "r",
-                ranks.ntile_from_rank(F.col("r"), n_rows, n_tiles).alias("t"),
-            ).collect()
-        }
         assert got_col == expect, got_col
-        assert got_int == expect, got_int
 
 
 class TestReservedColumnGuard:
@@ -520,7 +549,7 @@ class TestReservedColumnGuard:
             [("a", 1, 2)], "grp string, id long, _grank long"
         )
         with pytest.raises(ValueError, match="_grank"):
-            ranks.exact_global_ranks(df_out, [F.col("id")])
+            ranks.grouped_exact_ranks(df_out, [], [F.col("id")])
         df_cum = spark.createDataFrame(
             [("a", 1, 2)], "grp string, n long, n_cum long"
         )
@@ -529,11 +558,15 @@ class TestReservedColumnGuard:
                 df_cum, ["grp"], [F.col("n")], ["n"]
             )
         with pytest.raises(ValueError, match="n_cum"):
-            ranks.prefix_sums(df_cum, [F.col("n")], ["n"])
+            ranks.grouped_prefix_sums(df_cum, [], [F.col("n")], ["n"])
         df_tile = spark.createDataFrame(
             [("a", 1, 2)], "grp string, id long, tile long"
         )
         with pytest.raises(ValueError, match="tile"):
             ranks.grouped_ntile(df_tile, ["grp"], [F.col("id")], 3, "tile")
         with pytest.raises(ValueError, match="tile"):
-            ranks.distributed_ntile(df_tile, [F.col("id")], 3, "tile")
+            ranks.grouped_ntile(df_tile, [], [F.col("id")], 3, "tile")
+        # the constant key that stands in for group_cols=[]
+        df_key = spark.createDataFrame([(1, 2)], "id long, _rnk_g long")
+        with pytest.raises(ValueError, match="_rnk_g"):
+            ranks.grouped_ntile(df_key, [], [F.col("id")], 3, "tile")
